@@ -40,17 +40,17 @@ from amazon_security_lake_transformation_library_spark.operators import sketch a
 from amazon_security_lake_transformation_library_spark.operators import similarity as sim
 from amazon_security_lake_transformation_library_spark.operators import textstats as ts_ops
 from amazon_security_lake_transformation_library_spark.operators import turnsim as tsim
-from amazon_security_lake_transformation_library_spark.operators.salted import time_chunk
 from amazon_security_lake_transformation_library_spark.synth import transcripts as synth
 
 GAP_S = 1800
 QUERY_VEC_IDS = list(range(10))
-# hybrid router threshold for the synthesized flagship fixture: the hot
-# conversation holds ~10% of rows (>500 at every bench scale), the Pareto
-# tail stays under it -> both paths exercised. TEST THRESHOLD ONLY — the
-# library default (fused.asof_turn_features_hybrid hot_threshold_rows=1M)
-# is the scale-sane per-task row budget; 500 exists so the sf0.01 gate
-# covers both router branches.
+# hot threshold for the synthesized flagship fixture: the hot conversation
+# holds ~10% of rows (>500 at every bench scale), the Pareto tail stays
+# under it -> one plan with both chunked and one-chunk entities. TEST
+# THRESHOLD ONLY — the library default (fused.asof_turn_features
+# hot_threshold_rows=1M) is the scale-sane per-task row budget, and no
+# fixture entity reaches it, so at the default the flagship runs the
+# single-window plan; 500 exists so the gates cover the chunked plan.
 HYBRID_HOT_ROWS = 500
 
 
@@ -1033,12 +1033,14 @@ def _flagship_inputs(spark, sf_dir):
 
 
 def _q_flagship_transcripts(spark, sf_dir):
-    # North-star flagship: the fused single-window block (ONE Exchange +
-    # Sort for lag/lead, ffill, sessionize, cumsum AND the as-of join —
-    # operators/fused.py; equality with the modular composition is
-    # property-tested in tests/test_fused.py).
+    # North-star flagship, forced single window (no hot probe): ONE
+    # Exchange + Sort for lag/lead, ffill, sessionize, cumsum AND the as-of
+    # join — operators/fused.py; equality with the modular composition is
+    # property-tested in tests/test_fused.py.
     t, cf = _flagship_inputs(spark, sf_dir)
-    return fused_ops.asof_turn_features(t, cf, gap_seconds=GAP_S)
+    return fused_ops.asof_turn_features(
+        t, cf, gap_seconds=GAP_S, hot_threshold_rows=None
+    )
 
 
 def _q_flagship_bucketed(spark, sf_dir):
@@ -1066,22 +1068,21 @@ def _q_flagship_bucketed(spark, sf_dir):
 
 
 def _q_flagship_salted(spark, sf_dir):
-    # Hot-conversation-safe variant: chunk-and-carry over the fused union,
-    # so even the as-of fill of the hot conversation spreads across tasks.
+    # Threshold 0: every conversation is time-chunked (chunk-and-carry over
+    # the fused union), so even the as-of fill of the hot conversation
+    # spreads across tasks.
     t, cf = _flagship_inputs(spark, sf_dir)
-    return fused_ops.asof_turn_features_salted(
-        t, cf, time_chunk(chunk_seconds=6 * 3600), gap_seconds=GAP_S
+    return fused_ops.asof_turn_features(
+        t, cf, gap_seconds=GAP_S, hot_threshold_rows=0
     )
 
 
 def _q_flagship_hybrid(spark, sf_dir):
-    # Skew router: hot conv_ids (pre-pass count) -> salted path, Pareto
-    # tail -> plain path; identical output, no salted constant factor on
-    # the tail, no single-task floor on the hot entity.
+    # Test threshold: only the hot conversation is time-chunked, the
+    # Pareto tail keeps one chunk each, in the same plan.
     t, cf = _flagship_inputs(spark, sf_dir)
-    return fused_ops.asof_turn_features_hybrid(
-        t, cf, time_chunk(chunk_seconds=6 * 3600),
-        hot_threshold_rows=HYBRID_HOT_ROWS, gap_seconds=GAP_S,
+    return fused_ops.asof_turn_features(
+        t, cf, gap_seconds=GAP_S, hot_threshold_rows=HYBRID_HOT_ROWS
     )
 
 
@@ -3204,8 +3205,8 @@ def _q_embedding_covariance(spark, sf_dir):
 
     emb = _t(spark, sf_dir, "embeddings")
     # dim=64 is the embeddings table's schema contract (TESTDATA.md);
-    # passing it keeps the plan action-free and the empty-input path
-    # well-defined (no rows -> empty covariance, no inference probe)
+    # passing it skips the dimension probe (no rows -> empty covariance;
+    # the only eager work is covariance's two-row single-vector guard)
     out = ebx.covariance(emb, dim=64)
     return out.where(F.col("i") <= F.col("j")).select(
         F.col("i").cast("long").alias("i"),

@@ -30,9 +30,9 @@ Spark has no native ASOF JOIN (as of 4.1); both strategies are plain
 DataFrame rewrites — Catalyst still gets full pushdown/pruning on inputs.
 
 Scale notes: the window partitions by entity only, so a pathologically hot
-entity serializes in one task — pair with
-:mod:`amazon_security_lake_transformation_library_spark.operators.salted`
-(chunked forward-fill) when single entities exceed task-sized row counts.
+entity serializes in one task — the flagship's chunk-and-carry path
+(operators/fused.py, ``hot_threshold_rows``) handles single entities that
+exceed task-sized row counts.
 """
 
 from __future__ import annotations

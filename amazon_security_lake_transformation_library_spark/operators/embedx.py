@@ -57,6 +57,13 @@ def _dim_of(df: DataFrame, vec_col: str) -> int:
     return int(row[0]["d"])
 
 
+def _fit_rows(df: DataFrame, vec_col: str, d: int) -> DataFrame:
+    """The vectors a fit reads: non-NULL and of length ``d``."""
+    return df.where(
+        F.col(vec_col).isNotNull() & (F.size(vec_col) == F.lit(d))
+    ).select(vec_col)
+
+
 def gram_partials(
     df: DataFrame, vec_col: str = "embedding", dim: int | None = None
 ) -> DataFrame:
@@ -79,18 +86,22 @@ def gram_partials(
                 "v": np.concatenate([G.ravel(), s, [float(len(pdf))]]),
             })
 
-    src = df.where(
-        F.col(vec_col).isNotNull() & (F.size(vec_col) == F.lit(d))
-    ).select(vec_col)
-    parts = src.mapInPandas(gen, schema="i int, j int, v double")
+    parts = _fit_rows(df, vec_col, d).mapInPandas(
+        gen, schema="i int, j int, v double")
     return parts.groupBy("i", "j").agg(F.sum("v").alias("v"))
 
 
 def covariance(
     df: DataFrame, vec_col: str = "embedding", dim: int | None = None
 ) -> DataFrame:
-    """Sample covariance matrix as a ``(i, j, cov)`` DataFrame (d² rows)."""
-    g = gram_partials(df, vec_col, dim)
+    """Sample covariance matrix as a ``(i, j, cov)`` DataFrame (d² rows).
+    No vectors give no rows; a single vector raises ``ValueError`` (the
+    ``n - 1`` divisor is zero), at the cost of one two-row count job."""
+    d = dim if dim is not None else _dim_of(df, vec_col)
+    if _fit_rows(df, vec_col, d).limit(2).count() == 1:
+        raise ValueError("covariance: one vector has no sample covariance "
+                         "(needs at least two)")
+    g = gram_partials(df, vec_col, d)
     n = g.where((F.col("i") == -1) & (F.col("j") == -1)).select(
         F.col("v").alias("n"))
     means = (
@@ -121,21 +132,20 @@ def pca_components(
     eigvals[p])``. Collects exactly d² + d + 1 rows (bounded by the
     embedding dimension, not the corpus — the justified-collect class)."""
     d = dim if dim is not None else _dim_of(df, vec_col)
-    rows = gram_partials(df, vec_col, d).collect()
-    if not rows:
-        raise ValueError("pca_components: no rows to fit (callers should "
-                         "guard empty corpora — there is no covariance to "
-                         "decompose)")
     n = 0.0
     s = np.zeros(d)
     G = np.zeros((d, d))
-    for r in rows:
+    for r in gram_partials(df, vec_col, d).collect():
         if r["i"] == -1:
             n = r["v"]
         elif r["j"] == -1:
             s[r["i"]] = r["v"]
         else:
             G[r["i"], r["j"]] = r["v"]
+    if n < 2:
+        raise ValueError(f"pca_components: {int(n)} vectors to fit; a sample "
+                         "covariance needs at least two (callers should "
+                         "guard empty corpora)")
     mu = s / n
     C = (G - n * np.outer(mu, mu)) / (n - 1.0)
     C = 0.5 * (C + C.T)  # exact symmetry for eigh

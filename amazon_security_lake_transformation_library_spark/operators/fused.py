@@ -29,12 +29,18 @@ Equality with the modular composition is property-tested
 sort work, which is exactly the term that dominated the N->4N scaling gap
 (BASELINE.md §4.2 finding 2: sort-bound WindowExec).
 
-The salted variant extends the chunk-and-carry decomposition of
-``salted_features`` to the union frame, so even the as-of fill of a hot
-conversation (10% of all rows) spreads across tasks; the hybrid router
-sends hot entities (pre-pass hash count) down the salted path and the long
-tail down the plain path — skew-proof without paying the salted constant
-factor on unskewed data.
+Hot conversations: ``asof_turn_features`` first probes for entities above
+``hot_threshold_rows`` (an eager hash aggregate: under AQE at least two
+Spark jobs, the shuffle map stage and the take). With none, it returns the
+single-window plan above. Otherwise it runs chunk-and-carry over the
+same union frame: hot entities are split into time chunks, so even the
+as-of fill of a hot conversation (10% of all rows) spreads across tasks,
+and every other entity gets one constant chunk. The chunked plan is not
+free when nothing is hot: it still pays a narrow pre-pass, a carries
+window and a join back. On a 90k-turn input with no hot entity (4 cores,
+noop sink, 8 alternating reps) it built in 3.68 s median against 2.09 s for
+the single window, and 1.99 s for probe-then-single-window. That is why the
+probe picks the plan instead of always chunking.
 
 Reference analog: none — the reference has no joins or windows at all
 (SURVEY.md §2.B); this is the north-rule engine core.
@@ -48,7 +54,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.timeops import epoch_seconds
-from .salted import hot_entities
+from .salted import hot_entities, time_chunk
 
 _SIDE = "__side"
 _B = "__asof_payload"
@@ -119,7 +125,7 @@ def _out_columns(
     ]
 
 
-def asof_turn_features(
+def _single_window(
     transcripts: DataFrame,
     conv_features: DataFrame,
     gap_seconds: int = 1800,
@@ -133,9 +139,7 @@ def asof_turn_features(
     tool_col: str = "tool",
     turn_col: str = "turn_idx",
 ) -> DataFrame:
-    """Flagship block, fused: identical output to
-    ``asof_join(build_turn_features(transcripts), conv_features)`` with a
-    single Exchange + Sort over probe+build rows."""
+    """The whole block in a single Exchange + Sort over probe+build rows."""
     u = _union_frame(
         transcripts, conv_features, entity, ts, list(build_cols), strict, asof_ts_col
     ).withColumn(_CK, F.xxhash64(F.col(entity)))
@@ -186,7 +190,7 @@ def asof_turn_features(
     )
 
 
-def asof_turn_features_salted(
+def _chunk_and_carry(
     transcripts: DataFrame,
     conv_features: DataFrame,
     chunk: Column,
@@ -202,18 +206,18 @@ def asof_turn_features_salted(
     turn_col: str = "turn_idx",
     shared_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Hot-entity-safe fused block: chunk-and-carry over the union frame,
-    so lag/lead/ffill/sessionize AND the as-of fill of a hot conversation
-    all spread across tasks. Same output as :func:`asof_turn_features`
-    (property-tested); cost = ONE big-table shuffle on (entity, chunk) + a
-    3-column probe-side pre-pass for session-break totals + a tiny carry
-    frame (one row per chunk) + the join back.
+    """Chunk-and-carry over the union frame, so lag/lead/ffill/sessionize
+    AND the as-of fill of a hot conversation all spread across tasks. Same
+    output as :func:`_single_window` (property-tested); cost = ONE big-table
+    shuffle on (entity, chunk) + a narrow probe-side pre-pass for
+    session-break totals + a tiny carry frame (one row per chunk) + the
+    join back.
 
     ``chunk`` must be an order-respecting function of ``ts`` per entity
-    (e.g. ``salted.time_chunk``, or a per-entity conditional over it — see
-    the hybrid) so that equal-ts build/probe ties never split across
-    chunks; any non-ts columns it reads must be listed in ``shared_cols``
-    and be present on BOTH inputs.
+    (e.g. ``salted.time_chunk``, or a per-entity conditional over it) so
+    that equal-ts build/probe ties never split across chunks; any non-ts
+    columns it reads must be listed in ``shared_cols`` and be present on
+    BOTH inputs.
     """
     u = (
         _union_frame(
@@ -283,7 +287,7 @@ def asof_turn_features_salted(
     #    then streams with no extra sort);
     #  * build rows can never be the previous PROBE row, so per-chunk
     #    break totals from the probe side alone equal the pass-1 interior
-    #    counts (pinned by the salted==plain property suite).
+    #    counts (pinned by the chunked==modular property suite).
     #
     # Probe branch: (entity, ts, turn, role, tool, length(text)) — no text
     # payload, no union — one narrow shuffle + sort; every per-chunk probe
@@ -423,45 +427,84 @@ def asof_turn_features_salted(
     )
 
 
+def _hot_set(
+    df: DataFrame, entity: str, threshold_rows: int | None
+) -> DataFrame | None:
+    """Eager probe: the entities of ``df`` with more than ``threshold_rows``
+    rows as a one-column frame, or None when there are none (or the
+    threshold is None). Under AQE at least two Spark jobs: the aggregate's
+    shuffle map stage and the take."""
+    if threshold_rows is None:
+        return None
+    hot = hot_entities(df, entity, threshold_rows).select(entity)
+    return hot if hot.take(1) else None
+
+
+def asof_turn_features(
+    transcripts: DataFrame,
+    conv_features: DataFrame,
+    gap_seconds: int = 1800,
+    *,
+    hot_threshold_rows: int | None = 1_000_000,
+    chunk: Column | None = None,
+    entity: str = "conv_id",
+    ts: str = "ts",
+    build_cols: Sequence[str] = ("feature_val",),
+    strict: bool = False,
+    asof_ts_col: str = "asof_ts",
+    text_col: str = "text",
+    role_col: str = "role",
+    tool_col: str = "tool",
+    turn_col: str = "turn_idx",
+) -> DataFrame:
+    """Flagship block: identical output to
+    ``asof_join(build_turn_features(transcripts), conv_features)``.
+
+    Entities with more than ``hot_threshold_rows`` turns are split by
+    ``chunk`` (default ``salted.time_chunk(chunk_seconds=6 * 3600)``) and
+    run chunk-and-carry; every other entity keeps one chunk. When no entity
+    is that large, or the threshold is None, the plan is the single window
+    (one Exchange + Sort). Threshold 0 chunks every entity.
+
+    The chunked plan routes at the chunk EXPRESSION, so it keeps one scan
+    and one big-table shuffle (a two-pipeline split, plain tail + chunked
+    hot slice + union, scanned and shuffled the big table twice: 87 s vs
+    43 s at 1 executor). The hot flag unions through both sides
+    (``shared_cols``) so a hot entity's build rows land in the same chunk
+    sequence as its probe rows.
+    """
+    cols = dict(
+        entity=entity, ts=ts, build_cols=build_cols, strict=strict,
+        asof_ts_col=asof_ts_col, text_col=text_col, role_col=role_col,
+        tool_col=tool_col, turn_col=turn_col,
+    )
+    hot = _hot_set(transcripts, entity, hot_threshold_rows)
+    if hot is None:
+        return _single_window(transcripts, conv_features, gap_seconds, **cols)
+    if chunk is None:
+        chunk = time_chunk(chunk_seconds=6 * 3600)
+    flag = F.broadcast(hot.withColumn("__hot", F.lit(True)))
+    out = _chunk_and_carry(
+        transcripts.join(flag, entity, "left"),
+        conv_features.join(flag, entity, "left"),
+        F.when(F.col("__hot"), chunk).otherwise(F.lit(0)).cast("long"),
+        gap_seconds, shared_cols=("__hot",), **cols,
+    )
+    return out.drop("__hot")
+
+
 def asof_turn_features_hybrid(
     transcripts: DataFrame,
     conv_features: DataFrame,
     chunk: Column,
     hot_threshold_rows: int = 1_000_000,
-    gap_seconds: int = 1800,
-    entity: str = "conv_id",
-    ts: str = "ts",
-    build_cols: Sequence[str] = ("feature_val",),
     **kw,
 ) -> DataFrame:
-    """Skew router: entities above ``hot_threshold_rows`` get time-chunked
-    (chunk-and-carry spreads them across tasks), the long tail gets a
-    single constant chunk — for which the chunk machinery degenerates to
-    the plain fused semantics (one chunk == one window partition, empty
-    carries). One extra hash-agg pre-pass over the probe side (map-side
-    partials, tiny result, broadcast).
-
-    r3 one-pipeline form: the r2 router split rows into TWO full pipelines
-    (plain on the tail + salted on the hot slice + union), which scanned
-    and shuffled the big table twice — measured SLOWER than plain-with-
-    floor at sandbox scale (87s vs 43s at 1 executor). Routing at the
-    chunk EXPRESSION keeps one scan and one big-table shuffle; the hot
-    flag unions through both sides (``shared_cols``) so a hot entity's
-    build rows land in the same chunk sequence as its probe rows.
-
-    Output is identical to :func:`asof_turn_features` on the whole input
-    (property-tested).
-    """
-    hot = hot_entities(transcripts, entity, hot_threshold_rows).select(
-        entity, F.lit(True).alias("__hot")
+    """Forwarding shim for :func:`asof_turn_features`. The benchmark's
+    ``feature_build`` workload still calls this name, and the benchmark's
+    files only change together with the benchmark; the next benchmark
+    change calls ``asof_turn_features`` and deletes this shim."""
+    return asof_turn_features(
+        transcripts, conv_features,
+        hot_threshold_rows=hot_threshold_rows, chunk=chunk, **kw,
     )
-    t = transcripts.join(F.broadcast(hot), entity, "left")
-    cf = conv_features.join(F.broadcast(hot), entity, "left")
-    cond_chunk = (
-        F.when(F.col("__hot"), chunk).otherwise(F.lit(0)).cast("long")
-    )
-    out = asof_turn_features_salted(
-        t, cf, cond_chunk, gap_seconds, entity, ts, build_cols,
-        shared_cols=("__hot",), **kw
-    )
-    return out.drop("__hot")

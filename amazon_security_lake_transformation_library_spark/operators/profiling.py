@@ -18,7 +18,7 @@ window on the count table, never the corpus). No corpus re-scan, no
 driver collect.
 
 The reference library has no profiling surface; this generalizes the
-hot-entity pre-pass of fused.asof_turn_features_hybrid into a reusable
+hot-entity pre-pass of fused.asof_turn_features into a reusable
 diagnostic (SURVEY.md §2.D training-pipeline extension).
 """
 

@@ -18,27 +18,18 @@ decomposition):
 4. join the exclusive carry back on ``(entity, chunk)`` — broadcast, since
    the carry frame is ~rows/chunk_size — and combine.
 
-Equivalent to the unsalted window for any chunking that respects the order
-(property-tested in tests/test_salted.py). Cost: the big side is shuffled
-once on (entity, chunk) — same count as the unsalted plan's single shuffle —
-plus a broadcast of the small carry table.
+``fused._chunk_and_carry`` applies this to the flagship block; it equals
+the unsalted window for any order-respecting chunking (property-tested in
+tests/test_fused.py). This module holds the two pieces it routes with: the
+chunk id and the hot-entity pre-pass.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.timeops import epoch_seconds
-
-_CHUNK = "__salt_chunk"
-
-
-def turn_chunk(turn_col: str = "turn_idx", chunk_size: int = 4096) -> Column:
-    """Order-respecting chunk id for integer turn order."""
-    return (F.col(turn_col).cast("long") / F.lit(chunk_size)).cast("long")
 
 
 def time_chunk(ts_col: str = "ts", chunk_seconds: int = 86_400) -> Column:
@@ -47,94 +38,12 @@ def time_chunk(ts_col: str = "ts", chunk_seconds: int = 86_400) -> Column:
     return F.floor(epoch_seconds(ts_col) / F.lit(float(chunk_seconds)))
 
 
-def salted_cumsum(
-    df: DataFrame,
-    value: Column,
-    chunk: Column,
-    entity: str = "conv_id",
-    order: Sequence[str] = ("ts", "turn_idx"),
-    out_col: str = "cumsum",
-) -> DataFrame:
-    """Running sum of ``value`` per entity in order — hot-entity-safe."""
-    d = df.withColumn(_CHUNK, chunk)
-    w_part = (
-        Window.partitionBy(entity, _CHUNK)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    d = d.withColumn("__part", F.sum(value).over(w_part))
-
-    sums = d.groupBy(entity, _CHUNK).agg(F.sum(value).alias("__chunk_sum"))
-    w_carry = (
-        Window.partitionBy(entity)
-        .orderBy(_CHUNK)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carries = sums.select(
-        entity, _CHUNK, F.sum("__chunk_sum").over(w_carry).alias("__carry")
-    )
-    return (
-        d.join(F.broadcast(carries), [entity, _CHUNK])
-        .withColumn(
-            out_col, F.col("__part") + F.coalesce(F.col("__carry"), F.lit(0))
-        )
-        .drop(_CHUNK, "__part", "__carry")
-    )
-
-
-def salted_forward_fill(
-    df: DataFrame,
-    col: str,
-    chunk: Column,
-    entity: str = "conv_id",
-    order: Sequence[str] = ("ts", "turn_idx"),
-    out_col: str | None = None,
-) -> DataFrame:
-    """Forward-fill (last non-null) per entity in order — hot-entity-safe.
-
-    The per-chunk 'latest non-null value' is computed as a hash aggregate:
-    ``max(struct(order..., value))`` over non-null rows — deterministic,
-    no sort, map-side partials.
-    """
-    out_col = out_col or f"{col}_ffill"
-    d = df.withColumn(_CHUNK, chunk)
-    w_part = (
-        Window.partitionBy(entity, _CHUNK)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    d = d.withColumn("__part", F.last(F.col(col), ignorenulls=True).over(w_part))
-
-    last_struct = F.max(
-        F.when(
-            F.col(col).isNotNull(),
-            F.struct(*[F.col(c) for c in order], F.col(col).alias("v")),
-        )
-    )
-    lasts = d.groupBy(entity, _CHUNK).agg(last_struct.alias("__ls"))
-    w_carry = (
-        Window.partitionBy(entity)
-        .orderBy(_CHUNK)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carries = lasts.select(
-        entity,
-        _CHUNK,
-        F.last(F.col("__ls"), ignorenulls=True).over(w_carry)["v"].alias("__carry"),
-    )
-    return (
-        d.join(F.broadcast(carries), [entity, _CHUNK])
-        .withColumn(out_col, F.coalesce(F.col("__part"), F.col("__carry")))
-        .drop(_CHUNK, "__part", "__carry")
-    )
-
-
 def hot_entities(
     df: DataFrame, entity: str = "conv_id", threshold_rows: int = 1_000_000
 ) -> DataFrame:
     """Pre-pass: entities whose row count exceeds the per-task budget.
-    One hash aggregate; broadcast the result to route hot entities to the
-    salted path and the long tail to the plain window path.
+    One hash aggregate; the flagship broadcasts the result to chunk hot
+    entities and keep the long tail in one window partition.
     """
     return (
         df.groupBy(entity)

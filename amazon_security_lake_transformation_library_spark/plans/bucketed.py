@@ -28,8 +28,8 @@ from pyspark.sql import functions as F
 
 from ..operators.asof import asof_join_interval
 from ..operators.features import build_turn_features
-from ..operators.fused import _out_columns, asof_turn_features_salted
-from ..operators.salted import hot_entities, time_chunk
+from ..operators.fused import _chunk_and_carry, _hot_set, _out_columns
+from ..operators.salted import time_chunk
 
 
 def write_bucketed_table(
@@ -176,7 +176,8 @@ def flagship_bucketed(
     partitions on conv_id) finds entities above ``hot_threshold_rows``;
     the tail keeps the zero-Exchange SMJ plan (broadcast anti-join
     preserves the scan's partitioning AND ordering), the hot slice runs
-    the chunk-and-carry salted pipeline, and the two branches union.
+    the fused block's chunk-and-carry plan, and the two branches union.
+    The probe is the one ``fused.asof_turn_features`` runs.
     ``hot_threshold_rows=None`` disables the pre-pass (pure cold plan).
     With no hot entities present the returned plan is byte-identical to
     the unrouted one — the common case pays one tiny agg job, zero plan
@@ -223,8 +224,6 @@ def flagship_bucketed(
             *_out_columns(tc, "conv_id", "ts", "asof_ts", ["feature_val"])
         )
 
-    if hot_threshold_rows is None:
-        return _cold(t, cf)
     if hot_threshold_rows == "auto":
         import math
 
@@ -233,14 +232,15 @@ def flagship_bucketed(
             min_hot_threshold,
             int(math.sqrt(comparisons_budget / max(rate, 1e-9))),
         )
-    hot = hot_entities(t, "conv_id", hot_threshold_rows).select("conv_id")
-    if not hot.take(1):  # one Exchange-free agg job over the bucketed scan
+    # one Exchange-free agg job over the bucketed scan
+    hot = _hot_set(t, "conv_id", hot_threshold_rows)
+    if hot is None:
         return _cold(t, cf)
     hot_b = F.broadcast(hot)
     cold_out = _cold(
         t.join(hot_b, "conv_id", "anti"), cf.join(hot_b, "conv_id", "anti")
     )
-    hot_out = asof_turn_features_salted(
+    hot_out = _chunk_and_carry(
         t.join(hot_b, "conv_id", "semi"),
         cf.join(hot_b, "conv_id", "semi"),
         time_chunk(chunk_seconds=chunk_seconds),

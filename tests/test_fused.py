@@ -1,5 +1,6 @@
-"""Fused as-of+feature block == modular composition, for all three
-physical strategies (plain / salted chunk-and-carry / hybrid router).
+"""Fused as-of+feature block == modular composition, for every plan the
+hot threshold selects (single window / chunk-and-carry for every entity /
+chunk-and-carry for hot entities only).
 
 The fused operator exists purely as a physical optimization (one
 Exchange+Sort instead of two); these tests pin that it is semantically
@@ -20,7 +21,6 @@ from amazon_security_lake_transformation_library_spark.operators.features import
 from amazon_security_lake_transformation_library_spark.operators.fused import (
     asof_turn_features,
     asof_turn_features_hybrid,
-    asof_turn_features_salted,
 )
 from amazon_security_lake_transformation_library_spark.operators.salted import time_chunk
 
@@ -51,22 +51,31 @@ def test_fused_equals_modular(spark, transcripts_df, conv_features_df):
     )
 
 
-@pytest.mark.parametrize("chunk_seconds", [3600, 6 * 3600, 10])
-def test_fused_salted_equals_plain(
-    spark, transcripts_df, conv_features_df, chunk_seconds
+@pytest.mark.parametrize(
+    "threshold,chunk_seconds",
+    [(None, None), (0, 10), (0, 3600), (50, 10), (50, 3600), (10**9, None)],
+)
+def test_flagship_equals_modular(
+    spark, transcripts_df, conv_features_df, threshold, chunk_seconds
 ):
+    # None / 10**9: one window; 0: every conv chunked; 50: only the hot
+    # convs chunked. Chunk seconds 10 split sessions and ffill runs
+    # mid-conversation, 3600 leaves most convs in one chunk.
+    chunk = time_chunk(chunk_seconds=chunk_seconds) if chunk_seconds else None
     _cmp(
-        asof_turn_features_salted(
-            transcripts_df, conv_features_df, time_chunk(chunk_seconds=chunk_seconds)
+        asof_turn_features(
+            transcripts_df, conv_features_df,
+            hot_threshold_rows=threshold, chunk=chunk,
         ),
-        asof_turn_features(transcripts_df, conv_features_df),
+        _modular(transcripts_df, conv_features_df),
     )
 
 
 @pytest.mark.parametrize("threshold", [0, 50, 10**9])
 def test_hybrid_equals_plain(spark, transcripts_df, conv_features_df, threshold):
-    # threshold 0: everything salted; 50: only hot convs salted; huge:
-    # everything plain — all three routings must agree
+    # the forwarding shim must route exactly as asof_turn_features does:
+    # threshold 0: everything chunked; 50: only hot convs chunked; huge:
+    # everything in one window — all three routings must agree
     _cmp(
         asof_turn_features_hybrid(
             transcripts_df,
@@ -109,3 +118,26 @@ def test_fused_single_exchange_on_big_table(spark, transcripts_df, conv_features
     assert plan.count("Exchange") == 1, plan
     assert len(re.findall(r"\bSort\b", plan)) == 1, plan
     assert "unboundedfollowing" not in plan.lower().replace(" ", ""), plan
+
+
+def test_default_threshold_runs_single_window(
+    spark, transcripts_df, conv_features_df
+):
+    """No fixture entity exceeds the 1M default, so the hot probe hands
+    back the single-window plan, not the chunked one; the hybrid shim
+    forwards to the same routing. At threshold 50 the hot conversation is
+    chunked."""
+    for out in (
+        asof_turn_features(transcripts_df, conv_features_df),
+        asof_turn_features_hybrid(
+            transcripts_df, conv_features_df, time_chunk(chunk_seconds=3600)
+        ),
+    ):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange") == 1, plan
+        assert "__salt_chunk" not in plan, plan
+
+    hot = asof_turn_features(
+        transcripts_df, conv_features_df, hot_threshold_rows=50
+    )
+    assert "__salt_chunk" in hot._jdf.queryExecution().executedPlan().toString()

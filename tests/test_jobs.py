@@ -14,7 +14,7 @@ def test_build_features_job_runs(spark, tmp_path, capsys):
 
     rc = main([
         "--synth", "30", "--output", str(tmp_path / "bf"),
-        "--strategy", "fused", "--snapshot-id", "s1",
+        "--hot-threshold", "0", "--snapshot-id", "s1",
     ])
     assert rc == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])

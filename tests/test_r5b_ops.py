@@ -143,6 +143,18 @@ def test_pca_project_matches_numpy(spark):
     np.testing.assert_allclose(got.var(axis=0, ddof=1), eig, rtol=1e-6)
 
 
+
+def test_covariance_and_pca_reject_single_vector(spark):
+    """One vector has no sample covariance (the n - 1 divisor is zero):
+    both fits raise ValueError instead of returning Inf/NaN, and no
+    vectors still give an empty covariance."""
+    df, _ = _emb_df(spark, n=1)
+    with pytest.raises(ValueError):
+        ex.covariance(df)
+    with pytest.raises(ValueError):
+        ex.pca_components(df, p=2)
+    assert ex.covariance(df.limit(0), dim=8).count() == 0
+
 # -------------------------------------------------- semantic decontamination
 
 def test_semantic_decontaminate_matches_bruteforce(spark):
@@ -580,6 +592,24 @@ def test_srp_topk_planted_clusters_high_recall(spark):
     # bits) ~ 0.97^8 + 8*0.97^7*0.03 ~ 0.98 — floor set with margin
     assert rec[True] >= 0.85, rec
 
+
+
+def test_srp_topk_leading_null_embedding(spark):
+    """A NULL first embedding must not break the dimension probe, and
+    NULL or wrong-length vectors are left out of the ranking."""
+    from amazon_security_lake_transformation_library_spark.operators import similarity as sim
+
+    rng = np.random.default_rng(79)
+    rows = [(0, None)] + [
+        (i, rng.normal(size=16).astype("float32").tolist()) for i in range(1, 40)
+    ] + [(99, [1.0, 2.0, 3.0])]
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>").coalesce(1)
+    valid = df.where(F.size("embedding") == 16)
+    got = sim.srp_topk(df, [1, 2, 3], k=4).collect()
+    want = sim.srp_topk(valid, [1, 2, 3], k=4).collect()
+    assert got and sorted(got) == sorted(want)
+    assert not {0, 99} & {r["neighbor_id"] for r in got}
 
 def test_srp_bucket_is_pure_function_of_vector(spark):
     from amazon_security_lake_transformation_library_spark.operators import similarity as sim

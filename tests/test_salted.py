@@ -1,47 +1,7 @@
-"""Salted (chunk-and-carry) cumulative operators must equal the plain
-window versions for any order-respecting chunking — including on the hot
-conversation (~10% of all rows) and across session/chunk boundaries.
-"""
-
-import numpy as np
-from pyspark.sql import functions as F
+"""The hot-entity pre-pass finds the fixture's planted hot conversation.
+Chunk-and-carry equality is pinned in tests/test_fused.py."""
 
 from amazon_security_lake_transformation_library_spark.operators import salted
-from amazon_security_lake_transformation_library_spark.operators.features import (
-    cumulative_window,
-    forward_fill,
-)
-
-KEYS = ["conv_id", "turn_idx"]
-
-
-def _pd(df):
-    return df.toPandas().sort_values(KEYS, kind="mergesort").reset_index(drop=True)
-
-
-def test_salted_cumsum_equals_window(spark, transcripts_df):
-    val = (F.col("role") == "user").cast("long")
-    plain = transcripts_df.select(
-        "*", F.sum(val).over(cumulative_window()).alias("cumsum")
-    )
-    for chunk in [salted.turn_chunk(chunk_size=7), salted.time_chunk(chunk_seconds=3600)]:
-        got = _pd(salted.salted_cumsum(transcripts_df, val, chunk))
-        want = _pd(plain)
-        np.testing.assert_array_equal(
-            got["cumsum"].to_numpy(), want["cumsum"].to_numpy()
-        )
-
-
-def test_salted_ffill_equals_window(spark, transcripts_df):
-    want = _pd(forward_fill(transcripts_df, ["tool"]))
-    for chunk in [salted.turn_chunk(chunk_size=5), salted.time_chunk(chunk_seconds=1800)]:
-        got = _pd(
-            salted.salted_forward_fill(transcripts_df, "tool", chunk)
-        )
-        assert (
-            got["tool_ffill"].where(got["tool_ffill"].notna(), None).tolist()
-            == want["tool_ffill"].where(want["tool_ffill"].notna(), None).tolist()
-        )
 
 
 def test_hot_entity_detection(spark, transcripts_df):

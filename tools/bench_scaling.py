@@ -7,17 +7,21 @@ Each parallelism level runs in its own subprocess (fresh JVM — no config
 bleed between masters). Within a worker the job runs ``--runs`` times and
 the fastest wall is kept (amortizes JIT/shuffle-service warmup).
 
-Covers both window strategies:
-  * plain   — Window.partitionBy(conv_id): the hot conversation (~10% of
-              rows) serializes into one task and caps scaling;
-  * salted  — chunk-and-carry fused block (salted_features): the hot
-              conversation spreads across tasks.
+Flagship strategies (``fused.asof_turn_features`` at three hot
+thresholds, plus the storage-partitioned and modular plans):
+  * fused        — threshold None, one window: the hot conversation (~10%
+                   of rows) serializes into one task and caps scaling;
+  * fused_salted — threshold 0, every conversation time-chunked
+                   (chunk-and-carry): the hot conversation spreads;
+  * hybrid       — ``--hot-threshold``: only conversations above it chunk;
+  * bucketed     — plans/bucketed.flagship_bucketed over bucketed tables;
+  * modular      — build_turn_features then asof_join (two windows).
 Plus `--strategies curation`: the r4 curation/encoder pipeline (group
 z-score + frequency encode + forward-horizon label + ordered target
 encoding) — one shared conv_id Exchange/Sort for both windows, two
 broadcast-agg encoders. Use --hot-frac 0.001 for its scaling cell: the
 plain-window label/target frames inherit the same hot-entity serialization
-the flagship's salted path exists to fix.
+the flagship's chunked path exists to fix.
 
 Usage: python tools/bench_scaling.py [--n-convs 40000] [--runs 2]
 Prints one JSON line; paste the table into BASELINE.md.
@@ -43,12 +47,6 @@ def worker(args) -> None:
     )
     from amazon_security_lake_transformation_library_spark.operators.fused import (
         asof_turn_features,
-        asof_turn_features_hybrid,
-        asof_turn_features_salted,
-    )
-    from amazon_security_lake_transformation_library_spark.operators.salted import time_chunk
-    from amazon_security_lake_transformation_library_spark.operators.salted_features import (
-        build_turn_features_salted,
     )
     from amazon_security_lake_transformation_library_spark.session import get_spark
 
@@ -79,9 +77,6 @@ def worker(args) -> None:
         os.makedirs(args.event_log, exist_ok=True)
         extra["spark.eventLog.enabled"] = "true"
         extra["spark.eventLog.dir"] = args.event_log
-        # plain JSON so tools/stage_report.py can read it offline (no
-        # zstd codec available outside the JVM in this sandbox)
-        extra["spark.eventLog.compress"] = "false"
     spark = get_spark(
         f"scaling-{workers}w",
         master=f"local-cluster[{workers},4,12288]",
@@ -119,8 +114,10 @@ def worker(args) -> None:
             path_root=wh,
         )
 
+    thresholds = {"fused": None, "fused_salted": 0,
+                  "hybrid": args.hot_threshold}
+
     def job():
-        chunk = time_chunk(chunk_seconds=6 * 3600)
         if args.strategy == "curation":
             # representative r4 curation/encoder pipeline (NOT the as-of
             # flagship): two broadcast-agg encoders on the raw table
@@ -153,27 +150,13 @@ def worker(args) -> None:
             )
         elif args.strategy == "bucketed":
             out = flagship_bucketed(spark, "sc_t", "sc_cf")
-        elif args.strategy == "fused":
-            out = asof_turn_features(t, f)
-        elif args.strategy == "fused_salted":
-            out = asof_turn_features_salted(t, f, chunk)
-        elif args.strategy == "hybrid":
-            # threshold: anything above ~2 task-partitions' worth of rows
-            # routes to the salted path; the synthetic hot conv qualifies
-            out = asof_turn_features_hybrid(
-                t, f, chunk, hot_threshold_rows=args.hot_threshold
+        elif args.strategy in thresholds:
+            out = asof_turn_features(
+                t, f, hot_threshold_rows=thresholds[args.strategy]
             )
-        else:
-            if args.strategy == "salted":
-                # persist=True materializes the pass-1 frame; the nopersist
-                # variant recomputes it per consumer (BASELINE.md §4.2
-                # compares the two — they must execute DIFFERENT plans)
-                featd = build_turn_features_salted(t, chunk, persist=True)
-            elif args.strategy == "salted_nopersist":
-                featd = build_turn_features_salted(t, chunk, persist=False)
-            else:
-                featd = build_turn_features(t)
-            out = asof_join(featd, f, on="conv_id", ts="ts", build_cols=["feature_val"])
+        else:  # modular
+            out = asof_join(build_turn_features(t), f, on="conv_id", ts="ts",
+                            build_cols=["feature_val"])
         if args.sink == "parquet":
             out.write.mode("overwrite").parquet(f"{args.data}/out_{args.cpus}.parquet")
             return spark.read.parquet(f"{args.data}/out_{args.cpus}.parquet").count()
@@ -185,10 +168,6 @@ def worker(args) -> None:
 
     walls, rows = [], 0
     for _ in range(args.runs):
-        # fair timing across runs: the salted path persists its pass-1
-        # frame and Spark's CacheManager would satisfy the next run's
-        # identical canonical plan from cache
-        spark.catalog.clearCache()
         t0 = time.time()
         rows = job()
         walls.append(time.time() - t0)
@@ -204,13 +183,15 @@ def main() -> None:
     p.add_argument("--text-repeat", type=int, default=1,
                    help="widen each turn's text payload (x the ~100B "
                         "default) toward realistic KB-scale rows; the "
-                        "salted/hybrid narrow pre-pass is width-invariant "
-                        "so their premium over plain shrinks as this grows")
+                        "chunked plan's narrow pre-pass is width-invariant "
+                        "so its premium over one window shrinks as this grows")
     p.add_argument("--runs", type=int, default=2)
     p.add_argument("--levels", default="4,16",
                    help="total cores per level; each level runs cores/4 "
                         "four-core executor JVMs (N vs 4N executors)")
     p.add_argument("--strategies", default="fused,hybrid")
+    # hybrid: anything above ~2 task-partitions' worth of rows is chunked;
+    # the synthetic hot conversation qualifies
     p.add_argument("--hot-threshold", type=int, default=200_000)
     p.add_argument("--n-buckets", type=int, default=32,
                    help="bucket count for --strategies bucketed (fixed "

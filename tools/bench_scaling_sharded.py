@@ -205,7 +205,7 @@ def worker(args) -> None:
                 t, cf, sources=[f"f{i}" for i in range(8)],
                 hot_threshold_changes=1024)
         else:
-            out = asof_turn_features(t, cf)
+            out = asof_turn_features(t, cf, hot_threshold_rows=None)
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
         obs = Observation()
