@@ -8,44 +8,68 @@ For each probe row ``(entity, ts)`` attach the build-side row with the
 largest ``build.ts`` such that ``build.ts <= probe.ts`` (``strict=True``
 uses ``<``). Leakage-free by construction: no probe row can observe a build
 row with a strictly greater timestamp; ties resolve per the strict flag.
+:func:`asof_join` also takes pandas ``merge_asof``'s ``direction=``.
+Every form is left-outer (a probe row with nothing visible keeps NULL
+build columns), and every build side must be unique per ``(entity, ts)``
+— pre-shrink with :func:`latest_per_key` (latest-wins matches the
+reference oracle and pandas ``merge_asof``). An output column that already
+exists on the probe side (outside the keys and ``ts``) raises
+``ValueError`` instead of emitting two columns with one name.
 
-Two physical strategies
------------------------
-1. :func:`asof_join` (primary) — **union + last-non-null window**.
-   Tag both sides, union by aligned schema, forward-fill the build payload
-   struct over ``(entity) ORDER BY (ts, side, tiebreak)``, keep probe rows.
-   Cost: ONE shuffle on entity + one sort over n_probe + n_build rows.
+Two bodies
+----------
+1. ``_union_fill`` — **union + last-non-null window**, behind
+   :func:`asof_join`, :func:`asof_join_stacked` and
+   :func:`asof_join_skinny`. Tag probe rows side 1 and build rows side 0
+   or 2, union by name, fill each build payload struct over ``(entity)
+   ORDER BY (ts, side)``, keep probe rows. Cost: ONE shuffle on entity +
+   one sort over n_probe + n_build rows, whatever the number of payloads.
    Caveat (measured, BASELINE.md §7.12): that Exchange does NOT become a
    no-op over bucketed inputs — Spark does not propagate bucketing
-   through a Union. The layout-exploiting forms are the JOIN-shaped
-   rewrites: :func:`asof_join_interval` (zero Exchange/Sort over a
-   bucketed pair — what plans/bucketed.flagship_bucketed pins) and
-   :func:`asof_join_skinny_intervals` (probe-side zero Exchange/Sort,
-   shuffle proportional to the feature log).
-2. :func:`asof_join_range` (fallback) — bounded **range join** + pick
-   latest per probe key. Needs a match horizon; useful when the build side
-   is tiny or when a range-join-optimized engine executes it.
+   through a Union.
+2. ``_interval_join`` — build rows become half-open validity intervals
+   ``[ts, next_ts)`` via ``lead(ts)`` and a left sort-merge join matches
+   each probe row to EXACTLY ONE interval, behind
+   :func:`asof_join_interval` and :func:`asof_join_over_intervals`. The
+   only window runs on the build side, so over a conv_id-bucketed
+   ts-sorted probe the probe side needs neither Exchange nor Sort (what
+   plans/bucketed.flagship_bucketed pins).
 
-Spark has no native ASOF JOIN (as of 4.1); both strategies are plain
+Spark has no native ASOF JOIN (as of 4.1); both bodies are plain
 DataFrame rewrites — Catalyst still gets full pushdown/pruning on inputs.
 
-Scale notes: the window partitions by entity only, so a pathologically hot
-entity serializes in one task — the flagship's chunk-and-carry path
-(operators/fused.py, ``hot_threshold_rows``) handles single entities that
-exceed task-sized row counts.
+Streaming: the interval forms take a streaming probe unchanged. Their one
+window runs on the static build side, so the stream side is a plain
+stream-static left join — no watermark, no join state (batch equivalence
+pinned in tests/test_streaming.py). Spark re-executes the static side's
+plan on every micro-batch, so a widened skinny log
+(:func:`skinny_to_intervals`) must be ``.persist()``-ed, or written and
+re-read, before :func:`asof_join_over_intervals` joins it to a stream;
+otherwise the widening re-runs per micro-batch. Refresh = unpersist, widen
+the new log, persist again. No hot-entity router is needed there: a
+micro-batch bounds the per-entity probe count.
+
+Scale notes: the union window partitions by entity only, so a
+pathologically hot entity serializes in one task — the flagship's
+chunk-and-carry path (operators/fused.py, ``hot_threshold_rows``) handles
+single entities that exceed task-sized row counts.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.timeops import epoch_seconds
 
 _B = "__asof_payload"
 _SIDE = "__asof_side"
+_NEXT = "__next_ts"
+# per-source matched build timestamp column: ``{source}_asof_ts``
+_TS = "_asof_ts"
 
 
 def latest_per_key(
@@ -63,6 +87,92 @@ def latest_per_key(
     return agg.select(*keys, *[F.col(f"__w.{c}").alias(c) for c in [*order, *payload]])
 
 
+def _keys(on: str | Sequence[str]) -> list[str]:
+    return [on] if isinstance(on, str) else list(on)
+
+
+def _spine(
+    probe: DataFrame, keys: list[str], ts: str, added: Sequence[str]
+) -> list[str]:
+    """``keys, ts, <other probe columns>``: the probe part of an as-of
+    output. Raises ``ValueError`` when an ``added`` output column is one
+    of the other probe columns."""
+    rest = [c for c in probe.columns if c not in {*keys, ts}]
+    clash = [c for c in added if c in rest]
+    if clash:
+        raise ValueError(
+            f"as-of output column(s) {clash} already exist on the probe "
+            "side; rename or drop them before the join"
+        )
+    return [*keys, ts, *rest]
+
+
+def _union_fill(
+    probe: DataFrame,
+    builds: Sequence[DataFrame],
+    keys: list[str],
+    ts: str,
+    build_tag: int,
+    fills: dict[str, tuple[Column, bool]],
+) -> DataFrame:
+    """Union the probe rows (side 1) with every frame of ``builds`` (side
+    ``build_tag``), fill over ONE ``partitionBy(keys).orderBy(ts, side)``
+    window, keep the probe rows. Build tag 0 sorts a build row at T
+    before the probes at T (visible to them), 2 after (invisible to a
+    backward fill, visible to a forward one).
+
+    Each build frame carries only ``keys``, ``ts`` and struct columns, so
+    its payload never meets a probe column of the same name;
+    ``unionByName(allowMissingColumns=True)`` NULL-fills what a side
+    lacks. ``fills`` maps a name to ``(expr, ahead)``: the last non-NULL
+    ``expr`` at or before the row, or with ``ahead`` the first at or after
+    it. All frames share the window's partitioning and order, so Catalyst
+    plans one Exchange and one Sort. Returns the probe columns followed by
+    one column per fill.
+    """
+    sides = [b.withColumn(_SIDE, F.lit(build_tag)) for b in builds]
+    sides.append(probe.withColumn(_SIDE, F.lit(1)))
+    unioned = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), sides
+    )
+    w = Window.partitionBy(*keys).orderBy(ts, _SIDE)
+    back = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    fwd = w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    cols = [
+        (F.first(e, ignorenulls=True).over(fwd) if ahead
+         else F.last(e, ignorenulls=True).over(back)).alias(name)
+        for name, (e, ahead) in fills.items()
+    ]
+    return (
+        unioned.select("*", *cols)
+        .filter(F.col(_SIDE) == 1)
+        .select(*probe.columns, *fills)
+    )
+
+
+def _interval_join(
+    probe: DataFrame,
+    iv: DataFrame,
+    on: str,
+    ts: str,
+    start_col: str,
+    strict: bool,
+) -> DataFrame:
+    """Left-join each probe row to the one interval ``[start_col,
+    __next_ts)`` of its entity that holds its ``ts``. Non-strict matches
+    the interval starting AT the probe ts; strict takes the PREVIOUS
+    interval (the state strictly before ts)."""
+    _spine(probe, [on], ts, [c for c in iv.columns if c != on])
+    b = iv.withColumnRenamed(on, f"__b_{on}")
+    lo, hi, t = F.col(start_col), F.col(_NEXT), F.col(ts)
+    cond = (
+        (F.col(on) == F.col(f"__b_{on}"))
+        & ((lo < t) if strict else (lo <= t))
+        & (hi.isNull() | ((t <= hi) if strict else (t < hi)))
+    )
+    return probe.join(b, cond, "left").drop(f"__b_{on}", _NEXT)
+
+
 def asof_join(
     probe: DataFrame,
     build: DataFrame,
@@ -72,168 +182,58 @@ def asof_join(
     strict: bool = False,
     tolerance_seconds: float | None = None,
     asof_ts_col: str = "asof_ts",
-    suffix: str = "",
+    direction: str = "backward",
 ) -> DataFrame:
-    """Union + last-non-null-window as-of join (left outer: unmatched probe
-    rows keep NULL build columns).
-
-    ``build`` must be unique per ``(on, ts)`` — pre-shrink with
-    :func:`latest_per_key` otherwise (latest-wins matches the reference
-    oracle and pandas ``merge_asof``).
-
-    Ordering trick: rows sort by ``(ts, side)`` where build side=0 for
-    ``<=`` semantics (a build row at ts T is visible to probes at T) and
-    build side=2 for strict ``<`` (probes at T sort before it).
-    """
-    keys = [on] if isinstance(on, str) else list(on)
-    if build_cols is None:
-        build_cols = [c for c in build.columns if c not in {*keys, ts}]
-    out_names = {c: f"{c}{suffix}" for c in build_cols}
-
-    payload = F.struct(
-        F.col(ts).alias(asof_ts_col), *[F.col(c) for c in build_cols]
-    ).alias(_B)
-    build_side = build.select(
-        *keys,
-        F.col(ts).alias(ts),
-        F.lit(2 if strict else 0).alias(_SIDE),
-        payload,
-        *[F.lit(None).cast(probe.schema[c].dataType).alias(c)
-          for c in probe.columns if c not in {*keys, ts}],
-    )
-    probe_side = probe.select(
-        *keys,
-        F.col(ts).alias(ts),
-        F.lit(1).alias(_SIDE),
-        F.lit(None).cast(
-            build_side.schema[_B].dataType
-        ).alias(_B),
-        *[F.col(c) for c in probe.columns if c not in {*keys, ts}],
-    )
-
-    unioned = build_side.unionByName(probe_side)
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(ts, _SIDE)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = unioned.select(
-        "*", F.last(F.col(_B), ignorenulls=True).over(w).alias("__fill")
-    ).filter(F.col(_SIDE) == 1)
-
-    fill = F.col("__fill")
-    if tolerance_seconds is not None:
-        in_range = (
-            epoch_seconds(F.col(ts)) - epoch_seconds(fill[asof_ts_col])
-        ) <= float(tolerance_seconds)
-        fill = F.when(in_range, fill)
-
-    return filled.select(
-        *keys,
-        ts,
-        *[c for c in probe.columns if c not in {*keys, ts}],
-        fill[asof_ts_col].alias(asof_ts_col),
-        *[fill[c].alias(out_names[c]) for c in build_cols],
-    )
-
-
-def asof_join_directional(
-    probe: DataFrame,
-    build: DataFrame,
-    on: str | Sequence[str] = "conv_id",
-    ts: str = "ts",
-    build_cols: Sequence[str] | None = None,
-    direction: str = "forward",
-    strict: bool = False,
-    tolerance_seconds: float | None = None,
-    asof_ts_col: str = "asof_ts",
-    suffix: str = "",
-) -> DataFrame:
-    """As-of join with a match *direction* — the pandas ``merge_asof``
-    ``direction=`` surface (``backward`` / ``forward`` / ``nearest``),
-    completing :func:`asof_join` (which is backward-only).
+    """Union-fill as-of join with pandas ``merge_asof``'s ``direction``:
 
     * ``backward`` — latest build row with ``build.ts <= probe.ts``
-      (``<`` when ``strict``): identical semantics to :func:`asof_join`.
+      (``<`` when ``strict``).
     * ``forward`` — EARLIEST build row with ``build.ts >= probe.ts``
       (``>`` when ``strict``). The label-attachment direction: "first
       outcome observed at-or-after this turn".
     * ``nearest`` — whichever of the backward/forward candidates is
-      closer in absolute time; exact distance ties resolve BACKWARD
-      (the leakage-safe side). ``strict`` must be False — an equal-ts
-      row is distance 0 by definition.
+      closer in absolute time; exact distance ties resolve BACKWARD (the
+      leakage-safe side). ``strict`` must be False — an equal-ts row is
+      distance 0 by definition.
 
-    Physical shape: the same ONE union + ONE Exchange + ONE Sort as
-    :func:`asof_join`; ``forward`` uses a ``first(ignorenulls) OVER
-    (currentRow, unboundedFollowing)`` frame instead of the backward
-    ``last(...) OVER (unboundedPreceding, currentRow)``, and ``nearest``
-    evaluates both frames over the SAME window ordering — Catalyst
-    plans them as stacked Window nodes over one Exchange+Sort (pinned in
+    ``tolerance_seconds`` bounds the match distance in the direction
+    (nearest: applied to each candidate before choosing). Output: probe
+    columns, ``asof_ts_col`` (the matched build ts) and ``build_cols``.
+
+    Side tags: backward-visible build rows sort BEFORE equal-ts probes
+    (side 0) to land in the running frame; forward-visible ones sort
+    AFTER them (side 2) to land in the ``(currentRow,
+    unboundedFollowing)`` frame ``first(ignorenulls)`` reads. ``strict``
+    flips the tag so equal-ts rows fall outside the direction's frame.
+    ``nearest`` uses 0: the backward frame catches equal-ts rows at
+    distance 0, which win any comparison, so the forward frame only needs
+    strictly-later rows. Both frames share one window: ONE Exchange + ONE
+    Sort (pinned in
     tests/test_asof.py::test_directional_plan_single_exchange_sort).
-    Like the other union forms, the Exchange does NOT vanish over
-    bucketed inputs (bucketing stops at the Union — see
-    :func:`asof_join_skinny_intervals` for the layout-exploiting
-    rewrite pattern).
-
-    ``tolerance_seconds`` bounds the match distance per direction
-    (backward: ``probe.ts - build.ts``; forward: ``build.ts -
-    probe.ts``; nearest: applied to each candidate before choosing).
-    ``build`` must be unique per ``(on, ts)`` — pre-shrink with
-    :func:`latest_per_key`. Left-outer semantics throughout.
-
-    Sort-tag construction: rows order by ``(ts, side)`` with probe
-    side=1. Backward-visible build rows must sort BEFORE equal-ts
-    probes (side 0) to land in the backward frame; forward-visible
-    build rows must sort AFTER them (side 2). ``strict`` flips the tag
-    so equal-ts build rows fall OUTSIDE the direction's frame. For
-    ``nearest`` the tag is 0: the backward frame captures equal-ts
-    rows at distance 0, which win any comparison, so the forward frame
-    correctly sees only strictly-later rows.
     """
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"unknown direction: {direction!r}")
     if direction == "nearest" and strict:
         raise ValueError("direction='nearest' requires strict=False")
-    keys = [on] if isinstance(on, str) else list(on)
+    keys = _keys(on)
     if build_cols is None:
         build_cols = [c for c in build.columns if c not in {*keys, ts}]
-    out_names = {c: f"{c}{suffix}" for c in build_cols}
+    spine = _spine(probe, keys, ts, [asof_ts_col, *build_cols])
 
-    side_tag = {
+    tag = {
         "backward": 2 if strict else 0,
         "forward": 0 if strict else 2,
         "nearest": 0,
     }[direction]
-    payload = F.struct(
-        F.col(ts).alias(asof_ts_col), *[F.col(c) for c in build_cols]
-    ).alias(_B)
-    build_side = build.select(
-        *keys,
-        F.col(ts).alias(ts),
-        F.lit(side_tag).alias(_SIDE),
-        payload,
-        *[F.lit(None).cast(probe.schema[c].dataType).alias(c)
-          for c in probe.columns if c not in {*keys, ts}],
+    fills = {}
+    if direction != "forward":
+        fills["__fb"] = (F.col(_B), False)
+    if direction != "backward":
+        fills["__ff"] = (F.col(_B), True)
+    payload = F.struct(F.col(ts).alias(asof_ts_col), *build_cols).alias(_B)
+    filled = _union_fill(
+        probe, [build.select(*keys, ts, payload)], keys, ts, tag, fills
     )
-    probe_side = probe.select(
-        *keys,
-        F.col(ts).alias(ts),
-        F.lit(1).alias(_SIDE),
-        F.lit(None).cast(build_side.schema[_B].dataType).alias(_B),
-        *[F.col(c) for c in probe.columns if c not in {*keys, ts}],
-    )
-    unioned = build_side.unionByName(probe_side)
-
-    base = Window.partitionBy(*keys).orderBy(ts, _SIDE)
-    wb = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    wf = base.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-
-    fills = []
-    if direction in ("backward", "nearest"):
-        fills.append(F.last(F.col(_B), ignorenulls=True).over(wb).alias("__fb"))
-    if direction in ("forward", "nearest"):
-        fills.append(F.first(F.col(_B), ignorenulls=True).over(wf).alias("__ff"))
-    filled = unioned.select("*", *fills).filter(F.col(_SIDE) == 1)
 
     def dist_back(f):
         return epoch_seconds(F.col(ts)) - epoch_seconds(f[asof_ts_col])
@@ -241,19 +241,15 @@ def asof_join_directional(
     def dist_fwd(f):
         return epoch_seconds(f[asof_ts_col]) - epoch_seconds(F.col(ts))
 
+    fb, ff = F.col("__fb"), F.col("__ff")
+    if tolerance_seconds is not None:
+        fb = F.when(dist_back(fb) <= float(tolerance_seconds), fb)
+        ff = F.when(dist_fwd(ff) <= float(tolerance_seconds), ff)
     if direction == "backward":
-        fill = F.col("__fb")
-        if tolerance_seconds is not None:
-            fill = F.when(dist_back(fill) <= float(tolerance_seconds), fill)
+        fill = fb
     elif direction == "forward":
-        fill = F.col("__ff")
-        if tolerance_seconds is not None:
-            fill = F.when(dist_fwd(fill) <= float(tolerance_seconds), fill)
+        fill = ff
     else:
-        fb, ff = F.col("__fb"), F.col("__ff")
-        if tolerance_seconds is not None:
-            fb = F.when(dist_back(fb) <= float(tolerance_seconds), fb)
-            ff = F.when(dist_fwd(ff) <= float(tolerance_seconds), ff)
         # closer candidate wins; equal distance -> backward; one-sided
         # NULLs fall through to the surviving side
         fill = (
@@ -262,13 +258,10 @@ def asof_join_directional(
             .when(dist_fwd(ff) < dist_back(fb), ff)
             .otherwise(fb)
         )
-
     return filled.select(
-        *keys,
-        ts,
-        *[c for c in probe.columns if c not in {*keys, ts}],
+        *spine,
         fill[asof_ts_col].alias(asof_ts_col),
-        *[fill[c].alias(out_names[c]) for c in build_cols],
+        *[fill[c].alias(c) for c in build_cols],
     )
 
 
@@ -281,103 +274,30 @@ def asof_join_interval(
     strict: bool = False,
     asof_ts_col: str = "asof_ts",
 ) -> DataFrame:
-    """Interval form of the as-of join, built for pre-partitioned sorted
-    layouts (conv_id-bucketed, ts-sorted tables): the build side becomes
-    half-open validity intervals ``[ts, next_ts)`` via ``lead(ts)`` — an
-    in-partition window that, over a bucketed sorted scan, needs NO
-    Exchange and NO Sort — and the sort-merge join then matches each probe
-    row to EXACTLY ONE interval.
+    """Interval form of the backward as-of join, built for pre-partitioned
+    sorted layouts (conv_id-bucketed, ts-sorted tables): the build side
+    becomes half-open validity intervals ``[ts, next_ts)`` via
+    ``lead(ts)`` — an in-partition window that, over a bucketed sorted
+    scan, needs NO Exchange and NO Sort — and the sort-merge join then
+    matches each probe row to EXACTLY ONE interval. Same output columns as
+    :func:`asof_join` (probe columns, ``asof_ts_col``, ``build_cols``).
 
-    Why this exists: :func:`asof_join_range` enumerates every
-    (probe row x earlier build row) pair per entity and dedups with a
-    ``row_number`` window afterwards — per-entity QUADRATIC. Measured on a
-    10.15M-turn input with a 3.54M-row build side, the range form pushed
-    226.9M intermediate rows (22x the probe count) through its dedup
-    window; the interval form emits 10.15M, one per probe, and needs no
-    dedup pass at all. Same answer, linear not quadratic.
+    Why not a range join (entity equality + ``build.ts <= probe.ts``, then
+    a dedup window): it enumerates every (probe x earlier build) pair per
+    entity — per-entity QUADRATIC. On a 10.15M-turn input with a 3.54M-row
+    build side it pushed 226.9M rows (22x the probe count) through its
+    dedup window; the interval form emits 10.15M, one per probe.
 
-    Precondition: ``build`` must be unique per ``(on, ts)`` (apply
-    :func:`latest_per_key` upstream otherwise); with duplicates, ``lead``
-    over the tied timestamps is not deterministic. Probe rows earlier than
-    every build row survive with NULL build columns (left join), matching
-    the other as-of forms.
+    With duplicate ``(on, ts)`` build rows, ``lead`` over the tied
+    timestamps is not deterministic — dedupe upstream.
     """
     if build_cols is None:
         build_cols = [c for c in build.columns if c not in {on, ts}]
-
-    wb = Window.partitionBy(F.col(f"__b_{on}")).orderBy(F.col(asof_ts_col))
-    b = build.select(
-        F.col(on).alias(f"__b_{on}"),
-        F.col(ts).alias(asof_ts_col),
-        *build_cols,
-    ).withColumn("__next_ts", F.lead(F.col(asof_ts_col)).over(wb))
-
-    cond = F.col(on) == F.col(f"__b_{on}")
-    if strict:
-        cond = cond & (F.col(asof_ts_col) < F.col(ts)) & (
-            F.col("__next_ts").isNull() | (F.col(ts) <= F.col("__next_ts"))
-        )
-    else:
-        cond = cond & (F.col(asof_ts_col) <= F.col(ts)) & (
-            F.col("__next_ts").isNull() | (F.col(ts) < F.col("__next_ts"))
-        )
-    return probe.join(b, cond, "left").drop(f"__b_{on}", "__next_ts")
-
-
-def asof_join_range(
-    probe: DataFrame,
-    build: DataFrame,
-    probe_key: Sequence[str],
-    on: str | Sequence[str] = "conv_id",
-    ts: str = "ts",
-    build_cols: Sequence[str] | None = None,
-    strict: bool = False,
-    horizon_seconds: float | None = None,
-    asof_ts_col: str = "asof_ts",
-    broadcast_build: bool = False,
-) -> DataFrame:
-    """Range-join fallback: left join on entity + ``build.ts (<|<=) probe.ts``
-    (optionally bounded below by ``horizon_seconds``), then keep the latest
-    build row per probe row (``row_number() == 1``).
-
-    ``probe_key`` must uniquely identify probe rows (e.g. ``["conv_id",
-    "turn_idx"]``). With ``broadcast_build=True`` the build side is
-    broadcast — zero shuffle on the probe side (use for small dims).
-    """
-    keys = [on] if isinstance(on, str) else list(on)
-    if build_cols is None:
-        build_cols = [c for c in build.columns if c not in {*keys, ts}]
-
-    b = build.select(
-        *[F.col(k).alias(f"__b_{k}") for k in keys],
-        F.col(ts).alias(asof_ts_col),
-        *build_cols,
-    )
-    if broadcast_build:
-        b = F.broadcast(b)
-
-    cond = F.lit(True)
-    for k in keys:
-        cond = cond & (F.col(k) == F.col(f"__b_{k}"))
-    cond = cond & (
-        (F.col(asof_ts_col) < F.col(ts)) if strict
-        else (F.col(asof_ts_col) <= F.col(ts))
-    )
-    if horizon_seconds is not None:
-        cond = cond & (
-            epoch_seconds(F.col(asof_ts_col))
-            >= epoch_seconds(F.col(ts)) - float(horizon_seconds)
-        )
-
-    joined = probe.join(b, cond, "left")
-    w = Window.partitionBy(*[F.col(c) for c in probe_key]).orderBy(
-        F.col(asof_ts_col).desc_nulls_last()
-    )
-    return (
-        joined.select("*", F.row_number().over(w).alias("__rn"))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", *[f"__b_{k}" for k in keys])
-    )
+    w = Window.partitionBy(on).orderBy(asof_ts_col)
+    iv = build.select(
+        on, F.col(ts).alias(asof_ts_col), *build_cols
+    ).withColumn(_NEXT, F.lead(asof_ts_col).over(w))
+    return _interval_join(probe, iv, on, ts, asof_ts_col, strict)
 
 
 def asof_join_stacked(
@@ -387,127 +307,48 @@ def asof_join_stacked(
     ts: str = "ts",
     build_cols: "dict[str, Sequence[str]] | None" = None,
     strict: bool = False,
-    asof_ts_suffix: str = "_asof_ts",
 ) -> DataFrame:
     """Single-pass multi-table point-in-time join: attach, to every probe
     row, the as-of-latest row from EACH of K feature tables, in ONE
     shuffle + ONE sort total.
 
-    This is the feature-store spine-assembly shape (a label spine enriched
-    from K independently-updated feature tables). Chaining K
-    :func:`asof_join_interval` calls costs K joins — K Exchanges + K Sorts
-    on an unbucketed layout, and the probe spine (re-shuffled each step)
-    widens as it goes. Here every build table is tagged with its own
-    payload struct column (null on all other sources' rows), unioned with
-    the probe side, and filled by K ``last(..., ignorenulls=True)`` calls
-    that share ONE window spec — Catalyst collapses same-spec window
-    functions into a single WindowExec, so the physical plan is one
-    Exchange over ``n_probe + sum(n_build_k)`` rows, one Sort, one Window,
-    regardless of K (pinned in tests/test_plans_quality.py). NOTE: that
-    one Exchange does NOT vanish over bucketed inputs — Spark does not
-    propagate bucketing through a Union — so for bucketed/oversized probe
-    tables use :func:`asof_join_skinny_intervals`, whose probe side is
-    Exchange-free.
+    The feature-store spine-assembly shape (a label spine enriched from K
+    independently-updated feature tables). Chaining K
+    :func:`asof_join_interval` calls costs K Exchanges + K Sorts on an
+    unbucketed layout. Here each build table carries its own payload
+    struct and K ``last(..., ignorenulls=True)`` calls share ONE window:
+    one Exchange over ``n_probe + sum(n_build_k)`` rows, one Sort, one
+    Window, regardless of K (pinned in tests/test_asof_stacked.py). For
+    bucketed or oversized probe tables use
+    :func:`asof_join_skinny_intervals`, whose probe side is Exchange-free.
 
     Output columns: each source ``s``'s payload column ``c`` appears as
-    ``{s}_{c}``, plus ``{s}{asof_ts_suffix}`` (the matched build
-    timestamp, NULL when no build row is as-of-visible). Unmatched probe
-    rows keep NULLs everywhere (left-outer semantics, like every other
-    as-of form here).
-
-    Precondition (shared with the other forms): each build table unique
-    per ``(on, ts)`` — pre-shrink with :func:`latest_per_key`. Leakage
-    contract: with ``strict=False`` a build row at ts T is visible to
-    probes at T and later; never to earlier probes (build rows sort before
-    probe rows at equal ts; ``strict=True`` flips that side order, so
-    equal-ts build rows are invisible).
-
-    The reference library has no record-to-record joins at all
-    (SURVEY.md §2.B); this operator is north-rule surface
-    (BASELINE.json: "full as-of/point-in-time join ... over conv_id-
-    bucketed, ts-sorted partitions").
+    ``{s}_{c}``, plus ``{s}_asof_ts`` (the matched build timestamp, NULL
+    when no build row is as-of-visible).
     """
-    keys = [on] if isinstance(on, str) else list(on)
-    names = list(builds)
+    keys = _keys(on)
     cols = {
-        s: (
-            list(build_cols[s]) if build_cols and s in build_cols
-            else [c for c in builds[s].columns if c not in {*keys, ts}]
-        )
-        for s in names
+        s: list(build_cols[s]) if build_cols and s in build_cols
+        else [c for c in b.columns if c not in {*keys, ts}]
+        for s, b in builds.items()
     }
-    probe_extra = [c for c in probe.columns if c not in {*keys, ts}]
-    stk = {s: f"__stk_{s}" for s in names}
-
-    def payload(s: str):
-        return F.struct(
-            F.col(ts).alias(f"{s}{asof_ts_suffix}"),
+    names = {s: [f"{s}{_TS}", *[f"{s}_{c}" for c in cols[s]]] for s in builds}
+    spine = _spine(probe, keys, ts, [n for s in builds for n in names[s]])
+    sides = [
+        b.select(*keys, ts, F.struct(
+            F.col(ts).alias(f"{s}{_TS}"),
             *[F.col(c).alias(f"{s}_{c}") for c in cols[s]],
-        )
-
-    # Build each side with the full aligned column set: keys, ts, side
-    # tag, one struct per source (typed NULL off-source), typed-NULL probe
-    # extras on build rows.
-    sides = []
-    for s in names:
-        b = builds[s]
-        sides.append(
-            b.select(
-                *keys,
-                F.col(ts).alias(ts),
-                F.lit(2 if strict else 0).alias(_SIDE),
-                *[
-                    payload(s2).alias(stk[s2]) if s2 == s
-                    else F.lit(None).cast(
-                        # struct type as the source table would produce it
-                        builds[s2].select(payload(s2)).schema[0].dataType
-                    ).alias(stk[s2])
-                    for s2 in names
-                ],
-                *[
-                    F.lit(None).cast(probe.schema[c].dataType).alias(c)
-                    for c in probe_extra
-                ],
-            )
-        )
-    probe_struct_types = {
-        s: builds[s].select(payload(s)).schema[0].dataType for s in names
-    }
-    sides.append(
-        probe.select(
-            *keys,
-            F.col(ts).alias(ts),
-            F.lit(1).alias(_SIDE),
-            *[
-                F.lit(None).cast(probe_struct_types[s]).alias(stk[s])
-                for s in names
-            ],
-            *probe_extra,
-        )
+        ).alias(f"__stk_{s}"))
+        for s, b in builds.items()
+    ]
+    filled = _union_fill(
+        probe, sides, keys, ts, 2 if strict else 0,
+        {f"__f_{s}": (F.col(f"__stk_{s}"), False) for s in builds},
     )
-    unioned = sides[0]
-    for sd in sides[1:]:
-        unioned = unioned.unionByName(sd)
-
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(ts, _SIDE)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return filled.select(
+        *spine,
+        *[F.col(f"__f_{s}")[n].alias(n) for s in builds for n in names[s]],
     )
-    filled = unioned.select(
-        "*",
-        *[
-            F.last(F.col(stk[s]), ignorenulls=True).over(w).alias(f"__f_{s}")
-            for s in names
-        ],
-    ).filter(F.col(_SIDE) == 1)
-
-    out_cols = [*keys, ts, *probe_extra]
-    for s in names:
-        f = F.col(f"__f_{s}")
-        out_cols.append(f[f"{s}{asof_ts_suffix}"].alias(f"{s}{asof_ts_suffix}"))
-        out_cols.extend(f[f"{s}_{c}"].alias(f"{s}_{c}") for c in cols[s])
-    return filled.select(*out_cols)
 
 
 def asof_join_skinny(
@@ -519,7 +360,6 @@ def asof_join_skinny(
     on: str | Sequence[str] = "conv_id",
     ts: str = "ts",
     strict: bool = False,
-    asof_ts_suffix: str = "_asof_ts",
 ) -> DataFrame:
     """Point-in-time join against a SKINNY feature log — one table of
     ``(entity, ts, feature_name, value)`` rows, the EAV layout a feature
@@ -529,74 +369,36 @@ def asof_join_skinny(
     Same semantics as :func:`asof_join_stacked` (for each probe row and
     each ``s`` in ``sources``, the latest visible build row with
     ``source_col == s``), but because all K features live in one table
-    the plan needs NO per-source branch at all: one union of probe +
-    build, one window, and K ``last(when(source == s, payload),
-    ignorenulls=True)`` calls sharing the window spec — nulls from
-    other sources are simply skipped by ``ignorenulls``. Where the
-    per-table form costs one dedupe/scan branch per source (K Exchanges
-    upstream), this is ONE Exchange + ONE Sort + ONE Window end-to-end
-    on top of a single scan. That Exchange covers n_probe + n_log rows
-    and does NOT vanish over bucketed inputs (bucketing does not
-    propagate through a Union — measured, see
-    :func:`asof_join_skinny_intervals` for the bucketed/asymmetric-size
-    form whose shuffle is proportional to the log only).
+    the plan needs no per-source branch: K ``last(when(source == s,
+    payload), ignorenulls=True)`` calls share one window — ONE Exchange +
+    ONE Sort + ONE Window on top of a single scan. That Exchange covers
+    n_probe + n_log rows and does NOT vanish over bucketed inputs (see
+    :func:`asof_join_skinny_intervals` for the form whose shuffle is
+    proportional to the log only).
 
     ``build`` must be unique per ``(on, source_col, ts)``; rows whose
     ``source_col`` is not in ``sources`` are ignored (filter pushed into
-    the scan). Output: probe columns + ``{s}{asof_ts_suffix}`` and
-    ``{s}_{value_col}`` per source, NULL when nothing is visible
-    (left-outer, matching every other as-of form here).
+    the scan). Output: probe columns + ``{s}_asof_ts`` and
+    ``{s}_{value_col}`` per source.
     """
-    keys = [on] if isinstance(on, str) else list(on)
-    probe_extra = [c for c in probe.columns if c not in {*keys, ts}]
-
-    payload_t = build.select(
-        F.struct(
-            F.col(ts).alias("a"), F.col(value_col).alias("v")
-        )
-    ).schema[0].dataType
-    build_side = build.filter(F.col(source_col).isin(list(sources))).select(
-        *keys,
-        F.col(ts).alias(ts),
-        F.lit(2 if strict else 0).alias(_SIDE),
-        F.col(source_col).alias("__src"),
+    keys = _keys(on)
+    names = [(f"{s}{_TS}", f"{s}_{value_col}") for s in sources]
+    spine = _spine(probe, keys, ts, [n for pair in names for n in pair])
+    log = build.filter(F.col(source_col).isin(list(sources))).select(
+        *keys, ts, F.col(source_col).alias("__src"),
         F.struct(F.col(ts).alias("a"), F.col(value_col).alias("v")).alias(_B),
-        *[
-            F.lit(None).cast(probe.schema[c].dataType).alias(c)
-            for c in probe_extra
-        ],
     )
-    probe_side = probe.select(
-        *keys,
-        F.col(ts).alias(ts),
-        F.lit(1).alias(_SIDE),
-        F.lit(None).cast("string").alias("__src"),
-        F.lit(None).cast(payload_t).alias(_B),
-        *probe_extra,
-    )
-    unioned = build_side.unionByName(probe_side)
-
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(ts, _SIDE)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = unioned.select(
-        "*",
-        *[
-            F.last(
-                F.when(F.col("__src") == s, F.col(_B)), ignorenulls=True
-            ).over(w).alias(f"__f_{i}")
+    filled = _union_fill(
+        probe, [log], keys, ts, 2 if strict else 0,
+        {
+            f"__f_{i}": (F.when(F.col("__src") == s, F.col(_B)), False)
             for i, s in enumerate(sources)
-        ],
-    ).filter(F.col(_SIDE) == 1)
-
-    out_cols = [*keys, ts, *probe_extra]
-    for i, s in enumerate(sources):
-        f = F.col(f"__f_{i}")
-        out_cols.append(f["a"].alias(f"{s}{asof_ts_suffix}"))
-        out_cols.append(f["v"].alias(f"{s}_{value_col}"))
-    return filled.select(*out_cols)
+        },
+    )
+    return filled.select(*spine, *[
+        F.col(f"__f_{i}")[field].alias(n)
+        for i, pair in enumerate(names) for field, n in zip("av", pair)
+    ])
 
 
 def skinny_to_intervals(
@@ -606,7 +408,6 @@ def skinny_to_intervals(
     value_col: str = "value",
     on: str = "conv_id",
     ts: str = "ts",
-    asof_ts_suffix: str = "_asof_ts",
 ) -> DataFrame:
     """Collapse a skinny EAV feature log into piecewise-constant
     K-VECTOR validity intervals: one row per ``(entity, change_ts)``
@@ -618,8 +419,8 @@ def skinny_to_intervals(
     :func:`asof_join_skinny`, then ``lead(ts)`` closes the intervals.
     Cost: one Exchange + Sort over ~|log| rows and a K+2-column output —
     proportional to the FEATURE LOG, never the probe table. Feeds
-    :func:`asof_join_skinny_intervals` (batch) and
-    ``streaming.pipeline.asof_enrich_stream_skinny`` (live tail).
+    :func:`asof_join_over_intervals`; persist it when many probes or a
+    stream reuse it (module docstring).
     """
     changes = (
         log.filter(F.col(source_col).isin(list(sources)))
@@ -628,10 +429,10 @@ def skinny_to_intervals(
     )
     wide = asof_join_skinny(
         changes, log, sources, source_col=source_col, value_col=value_col,
-        on=on, ts=ts, strict=False, asof_ts_suffix=asof_ts_suffix,
+        on=on, ts=ts,
     )
     w = Window.partitionBy(on).orderBy(ts)
-    return wide.withColumn("__next_ts", F.lead(F.col(ts)).over(w))
+    return wide.withColumn(_NEXT, F.lead(F.col(ts)).over(w))
 
 
 def asof_join_skinny_intervals(
@@ -643,38 +444,32 @@ def asof_join_skinny_intervals(
     on: str = "conv_id",
     ts: str = "ts",
     strict: bool = False,
-    asof_ts_suffix: str = "_asof_ts",
 ) -> DataFrame:
     """K-feature point-in-time assembly from a skinny EAV log via
     PRE-WIDENED validity intervals — same output as
     :func:`asof_join_skinny`, different physical contract: the probe
     table is NEVER shuffled or sorted.
 
-    Why it exists: the single-pass union+window form cannot go
-    zero-Exchange over a bucketed layout — Spark does not propagate
-    bucketing through a Union, so even with probe AND log bucketed and
-    sorted on the entity, the union's window still plans one Exchange +
-    Sort over n_probe + n_log rows (measured; pinned in
+    Why it exists: the union-fill form cannot go zero-Exchange over a
+    bucketed layout — Spark does not propagate bucketing through a Union,
+    so even with probe AND log bucketed and sorted on the entity, the
+    union's window still plans one Exchange + Sort over n_probe + n_log
+    rows (pinned in
     tests/test_asof_stacked.py::test_skinny_intervals_bucketed_probe_no_exchange).
     Here the log is widened first (:func:`skinny_to_intervals` — one
-    Exchange over ~|log| rows), and the probe side is a sort-merge
-    interval join that matches each probe row to EXACTLY ONE interval:
-    over a conv_id-bucketed ts-sorted probe table the probe-side
+    Exchange over ~|log| rows) and the probe side is a sort-merge interval
+    join: over a conv_id-bucketed ts-sorted probe table the probe-side
     Exchange AND Sort both vanish, so total shuffle is proportional to
     the feature log, never the turns. At 10^12 probe turns against a
     10^9-row feature log that asymmetry IS the operator.
 
     Prefer :func:`asof_join_skinny` when probe and log are comparably
     sized and unbucketed (one pass, no join); prefer this form when the
-    probe table is bucketed or much larger than the log. Tie semantics
-    ride the interval inequality, mirroring :func:`asof_join_interval`:
-    non-strict matches the interval starting AT the probe ts; strict
-    takes the PREVIOUS interval (state strictly before the probe ts).
-    Left-outer like every other as-of form here.
+    probe table is bucketed or much larger than the log.
     """
     iv = skinny_to_intervals(
         log, sources, source_col=source_col, value_col=value_col,
-        on=on, ts=ts, asof_ts_suffix=asof_ts_suffix,
+        on=on, ts=ts,
     )
     return asof_join_over_intervals(probe, iv, on=on, ts=ts, strict=strict)
 
@@ -687,32 +482,14 @@ def asof_join_over_intervals(
     strict: bool = False,
 ) -> DataFrame:
     """The STATELESS half of the interval strategy: match each probe row
-    to exactly one pre-widened K-vector validity interval (the raw
-    output of :func:`skinny_to_intervals` — ``(entity, change_ts,
-    per-source columns, __next_ts)``) via a left sort-merge interval
-    join. Split out so callers that reuse one widened table across many
-    probes — the streaming live tail
-    (``streaming.pipeline.asof_enrich_stream_skinny``), or a batch probe
-    fanned over a persisted per-refresh interval snapshot — pay the
-    widening once instead of per join. Tie semantics mirror
-    :func:`asof_join_interval`: non-strict matches the interval starting
-    AT the probe ts; strict takes the PREVIOUS interval.
+    to exactly one pre-widened K-vector validity interval (the output of
+    :func:`skinny_to_intervals`) via a left sort-merge interval join.
+    Split out so callers that reuse one widened table across many probes
+    — a stream, or a batch probe fanned over a persisted per-refresh
+    interval snapshot — pay the widening once instead of per join.
     """
-    iv = intervals.withColumnRenamed(on, f"__b_{on}").withColumnRenamed(
-        ts, "__iv_ts"
-    )
-    cond = F.col(on) == F.col(f"__b_{on}")
-    if strict:
-        cond = cond & (F.col("__iv_ts") < F.col(ts)) & (
-            F.col("__next_ts").isNull() | (F.col(ts) <= F.col("__next_ts"))
-        )
-    else:
-        cond = cond & (F.col("__iv_ts") <= F.col(ts)) & (
-            F.col("__next_ts").isNull() | (F.col(ts) < F.col("__next_ts"))
-        )
-    return probe.join(iv, cond, "left").drop(
-        f"__b_{on}", "__iv_ts", "__next_ts"
-    )
+    iv = intervals.withColumnRenamed(ts, "__iv_ts")
+    return _interval_join(probe, iv, on, ts, "__iv_ts", strict).drop("__iv_ts")
 
 
 def asof_join_skinny_routed(
@@ -724,7 +501,6 @@ def asof_join_skinny_routed(
     on: str = "conv_id",
     ts: str = "ts",
     strict: bool = False,
-    asof_ts_suffix: str = "_asof_ts",
     hot_threshold_changes: int = 1024,
     hot_broadcast_limit: int | None = 1_000_000,
 ) -> DataFrame:
@@ -736,28 +512,20 @@ def asof_join_skinny_routed(
     probe shuffle-free but pays O(p_e × b_e) band comparisons per
     entity — measured catastrophic on hot conversations (BASELINE.md
     §7.13: one 136k-probe × 45k-interval conversation ran its shard
-    10× longer than its peers). The union+window form
+    10× longer than its peers). The union-fill form
     (:func:`asof_join_skinny`) is O((p_e + b_e) log) per entity but
-    shuffles the probe. So: entities whose CHANGE-POINT count ``b_e``
-    reaches ``hot_threshold_changes`` take the union path; the tail —
-    virtually the whole corpus — keeps the interval path. The router's
-    pre-pass aggregates the LOG only (b_e is the per-probe-row band
-    multiplier, observable without touching the probe table), and the
-    hot set is broadcast for the semi/anti splits, so the probe-side
-    cost of routing is two broadcast-filtered scans and no shuffle.
-    This is the same enforce-don't-document rule the flagship bucketed
-    path adopted in §7.4.
+    shuffles the probe. So entities whose CHANGE-POINT count ``b_e``
+    reaches ``hot_threshold_changes`` take the union path and the tail
+    keeps the interval path. The router's pre-pass aggregates the LOG
+    only, and the hot set is broadcast for the semi/anti splits, so
+    routing costs the probe two broadcast-filtered scans, no shuffle.
 
-    The broadcast assumes the hot set is SMALL — the designed regime
-    (hotness is the exception). A low ``hot_threshold_changes`` on a
-    broadly skewed corpus could make it driver-sized, so the key set is
-    counted first (one extra action over the persisted key set — log-agg
-    sized, cheap next to the assembly) and falls back to shuffle
-    semi/anti joins above ``hot_broadcast_limit`` keys. Pass
-    ``hot_broadcast_limit=None`` to skip the count and broadcast
-    unconditionally (the zero-extra-action fast path).
+    The broadcast assumes the hot set is SMALL, so the persisted key set
+    is counted first (one log-agg-sized action) and the splits fall back
+    to shuffle semi/anti joins above ``hot_broadcast_limit`` keys;
+    ``None`` skips the count and always broadcasts.
     """
-    keys = [on] if isinstance(on, str) else list(on)
+    keys = _keys(on)
     lg = log.filter(F.col(source_col).isin(list(sources)))
     hot_keys = (
         lg.groupBy(*keys)
@@ -775,7 +543,7 @@ def asof_join_skinny_routed(
         hot = F.broadcast(hot_keys)
     kw = dict(
         sources=sources, source_col=source_col, value_col=value_col,
-        on=on, ts=ts, strict=strict, asof_ts_suffix=asof_ts_suffix,
+        on=on, ts=ts, strict=strict,
     )
     out_hot = asof_join_skinny(
         probe.join(hot, keys, "left_semi"),

@@ -48,6 +48,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..caching import persist_tracked
 
@@ -548,5 +549,9 @@ def kcore(
             )
             return deg_final
         if n_after == 0:
-            return spark.createDataFrame([], "node long, core_deg long")
+            # fully peeled: the converged path's schema, node typed like src
+            return spark.createDataFrame([], T.StructType([
+                T.StructField("node", edges.schema[src].dataType),
+                T.StructField("core_deg", T.LongType(), False),
+            ]))
     raise RuntimeError(f"kcore did not converge in {max_iters} rounds")

@@ -90,7 +90,8 @@ def overlap_join(
     equal ``keys``. Exact for any ``bin_seconds`` (see module docstring);
     each overlapping pair is emitted exactly once (first-common-bin rule,
     no post-join distinct). Left/right column names must be disjoint
-    apart from ``keys`` — rename before calling.
+    apart from ``keys`` — rename before calling (a shared name raises
+    ``ValueError``).
 
     ``anti=True`` returns the LEFT rows with no overlapping right
     interval (temporal decontamination form): the matched left keys are
@@ -98,6 +99,12 @@ def overlap_join(
     the raw pair blow-up never materializes beyond the match probe.
     """
     keys = list(keys or [])
+    shared = [c for c in left.columns if c in right.columns and c not in keys]
+    if shared:
+        raise ValueError(
+            f"overlap_join: left and right share non-key column(s) {shared}; "
+            "rename them before the join"
+        )
     w = float(bin_seconds)
 
     def binned(df: DataFrame, start: str, end: str) -> DataFrame:

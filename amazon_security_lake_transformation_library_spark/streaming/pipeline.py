@@ -286,145 +286,6 @@ def stream_interval_join(
     return p.join(b, cond, "inner").drop(F.col(f"__sij_b.{on}"))
 
 
-def asof_enrich_stream(
-    turns: DataFrame,
-    features: DataFrame,
-    on: str = "conv_id",
-    ts: str = "ts",
-    build_cols: list[str] | None = None,
-    strict: bool = False,
-) -> DataFrame:
-    """Streaming point-in-time enrichment: as-of join a LIVE turn stream
-    against a STATIC feature table (the online inference-time analog of
-    the batch flagship — each arriving turn picks the latest feature row
-    with ``feature_ts <= ts``, or strictly ``<`` for leakage-free
-    serving).
-
-    This is the interval-form as-of (operators/asof.asof_join_interval)
-    applied unchanged to a streaming probe — legal because that operator's
-    ONLY window runs on the static build side; the stream side is a plain
-    non-equi stream-static left join, which Structured Streaming executes
-    per micro-batch with no watermark and no join state. One operator
-    definition, two execution modes (the same batch/stream unification
-    contract as ``sessionized_stream``; equivalence to the batch as-of is
-    pinned by test).
-
-    The static side is re-planned per micro-batch, so pointing it at a
-    SnapshotWriter/bucketed table makes feature updates visible to the
-    next batch without restarting the stream. For exactly-once output,
-    chain into ``incremental_feature_job``'s foreachBatch sink."""
-    from ..operators.asof import asof_join_interval
-
-    return asof_join_interval(
-        turns, features, on=on, ts=ts, build_cols=build_cols, strict=strict
-    )
-
-
-def skinny_feature_intervals(
-    log: DataFrame,
-    sources: list[str],
-    source_col: str = "feature",
-    value_col: str = "value",
-    on: str = "conv_id",
-    ts: str = "ts",
-    asof_ts_suffix: str = "_asof_ts",
-) -> DataFrame:
-    """STATIC-side prep for :func:`asof_enrich_stream_skinny`: collapse a
-    skinny EAV feature log ``(entity, ts, feature, value)`` into
-    piecewise-constant K-VECTOR validity intervals — one row per
-    ``(entity, change_ts)`` carrying the current value (and its own
-    update ts) of EVERY source at that instant, valid over
-    ``[change_ts, __next_ts)``.
-
-    Thin delegate to ``operators.asof.skinny_to_intervals`` (shared with
-    the batch interval form ``asof_join_skinny_intervals`` — one
-    definition, two execution modes). Cost is |change points| rows and
-    K+2 columns.
-
-    **Caller contract for per-refresh (not per-batch) cost**: a
-    stream-static join re-executes the static side's PLAN on every
-    micro-batch, so pass the result through ``.persist()`` — or write it
-    to parquet and re-read — before handing it to the stream join;
-    otherwise the full window-heavy widening re-runs per micro-batch.
-    Refresh = unpersist, rebuild from the new log, persist again.
-    """
-    from ..operators.asof import skinny_to_intervals
-
-    return skinny_to_intervals(
-        log, sources, source_col=source_col, value_col=value_col,
-        on=on, ts=ts, asof_ts_suffix=asof_ts_suffix,
-    )
-
-
-def asof_enrich_stream_skinny(
-    turns: DataFrame,
-    log: DataFrame | None = None,
-    sources: list[str] | None = None,
-    source_col: str = "feature",
-    value_col: str = "value",
-    on: str = "conv_id",
-    ts: str = "ts",
-    strict: bool = False,
-    asof_ts_suffix: str = "_asof_ts",
-    intervals: DataFrame | None = None,
-) -> DataFrame:
-    """Streaming K-feature point-in-time assembly from ONE skinny EAV
-    feature log — the live-tail analog of the batch single-pass
-    ``asof_join_skinny`` (which is not streamable as-is: its union+window
-    runs over the probe side).
-
-    Rewrite: the log is widened into piecewise-constant K-vector
-    validity intervals (:func:`skinny_feature_intervals`); each arriving
-    turn then takes a single STATELESS stream-static interval join
-    (``operators.asof.asof_join_over_intervals``) — no watermark, no join
-    state, exactly one matching interval per turn, regardless of K.
-
-    Two calling modes. PER-REFRESH (preferred at scale): widen once with
-    :func:`skinny_feature_intervals`, ``.persist()`` or materialize the
-    result, and pass it as ``intervals=`` — the window-heavy widening is
-    then paid per feature-table refresh. CONVENIENCE: pass the raw
-    ``log`` + ``sources`` and the widening is folded into the static
-    plan — Spark re-executes an un-cached static plan on EVERY
-    micro-batch, so this mode pays the widening per batch (fine for
-    small logs, wrong at scale; see :func:`skinny_feature_intervals`'s
-    caller contract). The
-    per-feature ``{s}{asof_ts_suffix}`` / ``{s}_{value_col}`` columns
-    carried by the interval row are each feature's own latest update, so
-    the output schema matches the batch form column-for-column (pinned
-    by tests/test_streaming.py::test_skinny_enrich_stream_matches_batch).
-
-    Tie semantics ride the interval inequality, not the widening (which
-    is always inclusive): non-strict matches the interval starting AT
-    the turn's ts (an update at T is visible to turns at T); ``strict``
-    shifts to the PREVIOUS interval — state as of strictly-before-T —
-    mirroring ``asof_join_interval``'s bounds. Turns earlier than every
-    change point keep NULLs (left join), like every batch as-of form.
-
-    Hot entities: the batch interval form pays O(p_e x b_e) band
-    comparisons per entity and routes hot entities away
-    (``asof_join_skinny_routed``, BASELINE.md §7.15). In live-tail mode
-    that blowup is naturally bounded — p_e per MICRO-BATCH is at most
-    the batch size, so the per-batch band cost is O(batch x b_e) and no
-    router is needed; what a hot conversation does inflate is the
-    static interval table (b_e rows), which is per-refresh widening
-    cost, not stream state.
-    """
-    from ..operators.asof import asof_join_over_intervals
-
-    if intervals is None:
-        if log is None or sources is None:
-            raise ValueError(
-                "pass either a pre-widened intervals= table or log= + sources="
-            )
-        intervals = skinny_feature_intervals(
-            log, sources, source_col=source_col, value_col=value_col,
-            on=on, ts=ts, asof_ts_suffix=asof_ts_suffix,
-        )
-    return asof_join_over_intervals(
-        turns, intervals, on=on, ts=ts, strict=strict
-    )
-
-
 def flagship_stream(
     turns: DataFrame,
     features: DataFrame,
@@ -433,16 +294,20 @@ def flagship_stream(
     """The full north-rule pipeline in live-tail mode: per-conversation
     stateful features (sessionize + cumulative user turns + tool
     forward-fill, O(1) state per entity, applyInPandasWithState) followed
-    by point-in-time enrichment against the static feature table (the
-    stream-static interval as-of — stateless, so it composes after the
-    stateful operator in append mode). Batch/stream unification contract:
+    by point-in-time enrichment against the static feature table
+    (``operators.asof.asof_join_interval`` on the stream: a stream-static
+    join with no state, so it composes after the stateful operator in
+    append mode; see the ``asof`` module docstring for the static-side
+    refresh contract). Batch/stream unification contract:
     on the same rows, output columns match operators/fused
     .asof_turn_features column-for-column on the shared schema (pinned by
     tests/test_streaming.py::test_flagship_stream_matches_batch).
     Chain into ``incremental_feature_job``'s foreachBatch sink for
     exactly-once output keyed by micro-batch id."""
+    from ..operators.asof import asof_join_interval
+
     feats = stateful_turn_features(turns, watermark=watermark)
-    return asof_enrich_stream(feats, features, build_cols=["feature_val"])
+    return asof_join_interval(feats, features, build_cols=["feature_val"])
 
 
 def incremental_dedup_job(

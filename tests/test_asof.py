@@ -1,4 +1,4 @@
-"""As-of join: Spark (both physical strategies) vs pandas merge_asof oracle,
+"""As-of join: Spark vs pandas merge_asof oracle (all three directions),
 <= vs < tie semantics, tolerance, and zero-leakage properties.
 """
 
@@ -8,8 +8,6 @@ import pytest
 
 from amazon_security_lake_transformation_library_spark.operators.asof import (
     asof_join,
-    asof_join_directional,
-    asof_join_range,
     latest_per_key,
 )
 from amazon_security_lake_transformation_library_spark.oracle import pandas_oracle as ora
@@ -45,22 +43,6 @@ def test_asof_union_window_matches_merge_asof(
 ):
     got = asof_join(
         transcripts_df, conv_features_df, on="conv_id", ts="ts", strict=strict
-    ).toPandas()
-    _check(got, transcripts_pdf, conv_features_pdf, strict)
-
-
-@pytest.mark.parametrize("strict", [False, True])
-def test_asof_range_fallback_matches(
-    spark, transcripts_df, conv_features_df, transcripts_pdf, conv_features_pdf, strict
-):
-    got = asof_join_range(
-        transcripts_df,
-        conv_features_df,
-        probe_key=KEYS,
-        on="conv_id",
-        ts="ts",
-        strict=strict,
-        broadcast_build=True,
     ).toPandas()
     _check(got, transcripts_pdf, conv_features_pdf, strict)
 
@@ -159,7 +141,7 @@ def test_asof_directional_matches_merge_asof(
     spark, transcripts_df, conv_features_df, transcripts_pdf,
     conv_features_pdf, direction, strict
 ):
-    got = asof_join_directional(
+    got = asof_join(
         transcripts_df, conv_features_df, on="conv_id", ts="ts",
         direction=direction, strict=strict,
     ).toPandas()
@@ -171,7 +153,7 @@ def test_asof_directional_tolerance(
     spark, transcripts_df, conv_features_df, transcripts_pdf,
     conv_features_pdf, direction
 ):
-    got = asof_join_directional(
+    got = asof_join(
         transcripts_df, conv_features_df, direction=direction,
         tolerance_seconds=600.0,
     ).toPandas()
@@ -190,7 +172,7 @@ def test_asof_nearest_tie_resolves_backward(spark):
         "ts": pd.to_datetime(["2024-01-01 00:05:00", "2024-01-01 00:15:00"]),
         "feature_val": [1.0, 2.0],
     })
-    out = asof_join_directional(
+    out = asof_join(
         spark.createDataFrame(probe), spark.createDataFrame(build),
         direction="nearest",
     ).toPandas()
@@ -209,7 +191,7 @@ def test_asof_nearest_equal_ts_wins_at_distance_zero(spark):
         "ts": pd.to_datetime(["2024-01-01 00:10:00", "2024-01-01 00:11:00"]),
         "feature_val": [5.0, 9.0],
     })
-    out = asof_join_directional(
+    out = asof_join(
         spark.createDataFrame(probe), spark.createDataFrame(build),
         direction="nearest",
     ).toPandas()
@@ -218,17 +200,16 @@ def test_asof_nearest_equal_ts_wins_at_distance_zero(spark):
 
 def test_asof_directional_rejects_bad_args(spark, transcripts_df, conv_features_df):
     with pytest.raises(ValueError):
-        asof_join_directional(transcripts_df, conv_features_df,
-                              direction="sideways")
+        asof_join(transcripts_df, conv_features_df, direction="sideways")
     with pytest.raises(ValueError):
-        asof_join_directional(transcripts_df, conv_features_df,
-                              direction="nearest", strict=True)
+        asof_join(transcripts_df, conv_features_df,
+                  direction="nearest", strict=True)
 
 
 def test_directional_plan_single_exchange_sort(spark, transcripts_df, conv_features_df):
     """nearest evaluates BOTH frames but still plans over ONE Exchange +
     ONE Sort (the frames share the window partitioning/ordering)."""
-    df = asof_join_directional(
+    df = asof_join(
         transcripts_df, conv_features_df, direction="nearest"
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -237,3 +218,59 @@ def test_directional_plan_single_exchange_sort(spark, transcripts_df, conv_featu
     )
     assert n_sort == 1
     assert plan.count("Exchange") <= 1
+
+
+# ---- output-name collisions ----
+
+
+def _collision_inputs(spark):
+    probe = pd.DataFrame({
+        "conv_id": ["c1", "c1"],
+        "ts": pd.to_datetime(["2024-01-01 00:10:00", "2024-01-01 00:20:00"]),
+        "value": [7.0, 8.0],
+    })
+    log = pd.DataFrame({
+        "conv_id": ["c1", "c1"],
+        "ts": pd.to_datetime(["2024-01-01 00:05:00", "2024-01-01 00:15:00"]),
+        "feature": ["f0", "f0"],
+        "value": [1.0, 2.0],
+    })
+    return spark.createDataFrame(probe), spark.createDataFrame(log)
+
+
+def _form(name):
+    from amazon_security_lake_transformation_library_spark.operators import asof
+
+    def wide(log):  # per-table build: (conv_id, ts, feature_val)
+        return log.select("conv_id", "ts",
+                          log["value"].alias("feature_val"))
+
+    return {
+        # each form: (call, an output column it adds, its f0 value column)
+        "asof_join": (lambda p, l: asof.asof_join(p, wide(l)),
+                      "asof_ts", "feature_val"),
+        "interval": (lambda p, l: asof.asof_join_interval(p, wide(l)),
+                     "asof_ts", "feature_val"),
+        "stacked": (lambda p, l: asof.asof_join_stacked(
+            p, {"f0": l.drop("feature")}), "f0_asof_ts", "f0_value"),
+        "skinny": (lambda p, l: asof.asof_join_skinny(p, l, ["f0"]),
+                   "f0_asof_ts", "f0_value"),
+    }[name]
+
+
+@pytest.mark.parametrize("form", ["asof_join", "interval", "stacked", "skinny"])
+def test_output_name_collision_raises(spark, form):
+    """A probe column that an as-of form would add again is a ValueError
+    naming it, not two same-named output columns. A probe column named
+    like a build INPUT column (``value``) is no collision: it passes
+    through unchanged, because build payloads travel inside structs."""
+    from pyspark.sql import functions as F
+
+    fn, added, val = _form(form)
+    probe, log = _collision_inputs(spark)
+    got = fn(probe, log).orderBy("ts").toPandas()
+    assert got["value"].tolist() == [7.0, 8.0]
+    assert got[val].tolist() == [1.0, 2.0]
+    for col in (added, val):
+        with pytest.raises(ValueError, match=col):
+            fn(probe.withColumn(col, F.lit(0.0)), log)

@@ -81,6 +81,21 @@ def test_overlap_join_keyed_and_anti(spark):
     assert {r["l_id"] for r in anti} == set(lp["l_id"]) - matched_left
 
 
+def test_overlap_join_rejects_shared_column_names(spark):
+    """Two sessions_to_intervals outputs joined with the default names
+    share start_ts/end_ts/session_id/n_rows: a ValueError naming them,
+    not a later ambiguous-column AnalysisException."""
+    pdf = pd.DataFrame({
+        "user_id": [1, 1, 2],
+        "session_id": [0, 1, 0],
+        "ts": pd.to_datetime([10, 5000, 7], unit="s"),
+    })
+    a = iv.sessions_to_intervals(spark.createDataFrame(pdf))
+    b = iv.sessions_to_intervals(spark.createDataFrame(pdf))
+    with pytest.raises(ValueError, match="start_ts"):
+        iv.overlap_join(a, b, keys=["user_id"])
+
+
 def test_sessions_to_intervals(spark):
     pdf = pd.DataFrame({
         "user_id": [1, 1, 1, 2],
@@ -509,6 +524,18 @@ def test_kcore_all_peeled_returns_empty(spark, tmp_path):
     df = spark.createDataFrame(pd.DataFrame(edges, columns=["src", "dst"]))
     out = g.kcore(df, 3, work_dir=str(tmp_path / "p")).collect()
     assert out == []
+
+
+def test_kcore_all_peeled_keeps_string_node_type(spark, tmp_path):
+    """A string-id graph peeled to nothing (k above its max degree)
+    returns the converged path's schema: node typed like src."""
+    from amazon_security_lake_transformation_library_spark.operators import graph as g
+
+    edges = [(f"n{i}", f"n{i + 1}") for i in range(6)]
+    df = spark.createDataFrame(pd.DataFrame(edges, columns=["src", "dst"]))
+    out = g.kcore(df, 3, work_dir=str(tmp_path / "s"))
+    assert out.collect() == []
+    assert out.schema["node"].dataType.simpleString() == "string"
 
 
 # ------------------------------------------------------- data-quality gate

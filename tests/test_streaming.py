@@ -280,7 +280,10 @@ def test_asof_enrich_stream_matches_batch(spark, stream_input, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from amazon_security_lake_transformation_library_spark.operators.asof import asof_join
+    from amazon_security_lake_transformation_library_spark.operators.asof import (
+        asof_join,
+        asof_join_interval,
+    )
     from amazon_security_lake_transformation_library_spark.synth.transcripts import (
         gen_conv_features,
     )
@@ -295,7 +298,7 @@ def test_asof_enrich_stream_matches_batch(spark, stream_input, tmp_path):
     features = spark.read.parquet(fdir)
 
     stream = sp.read_turn_stream(spark, root, max_files_per_trigger=1)
-    enriched = sp.asof_enrich_stream(stream, features, build_cols=["feature_val"])
+    enriched = asof_join_interval(stream, features, build_cols=["feature_val"])
     _run_to_memory(enriched, "asof_stream", str(tmp_path))
 
     cols = ["conv_id", "turn_idx", "asof_ts", "feature_val"]
@@ -381,7 +384,12 @@ def test_skinny_enrich_stream_matches_batch(spark, stream_input, tmp_path, stric
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from amazon_security_lake_transformation_library_spark.operators.asof import asof_join_skinny
+    from amazon_security_lake_transformation_library_spark.operators.asof import (
+        asof_join_over_intervals,
+        asof_join_skinny,
+        asof_join_skinny_intervals,
+        skinny_to_intervals,
+    )
 
     root, pdf = stream_input
     sources = ["f0", "f1", "f2"]
@@ -396,7 +404,7 @@ def test_skinny_enrich_stream_matches_batch(spark, stream_input, tmp_path, stric
 
     stream = sp.read_turn_stream(spark, root, max_files_per_trigger=1)
     probe_cols = ["conv_id", "turn_idx", "ts"]
-    enriched = sp.asof_enrich_stream_skinny(
+    enriched = asof_join_skinny_intervals(
         stream.select(*probe_cols), log, sources, strict=strict
     )
     name = f"skinny_stream_{int(strict)}"
@@ -427,13 +435,13 @@ def test_skinny_enrich_stream_matches_batch(spark, stream_input, tmp_path, stric
         # past each conv's first update
         assert got["f0_value"].notna().any()
 
-    # the PER-REFRESH calling mode (pre-widened persisted intervals=) must
-    # produce the same rows as the convenience log= mode
-    iv = sp.skinny_feature_intervals(log, sources).persist()
+    # the PER-REFRESH calling mode (widen once, persist, join the stream
+    # to the persisted intervals) must produce the same rows
+    iv = skinny_to_intervals(log, sources).persist()
     try:
         stream2 = sp.read_turn_stream(spark, root, max_files_per_trigger=1)
-        enriched2 = sp.asof_enrich_stream_skinny(
-            stream2.select(*probe_cols), intervals=iv, strict=strict
+        enriched2 = asof_join_over_intervals(
+            stream2.select(*probe_cols), iv, strict=strict
         )
         name2 = f"skinny_stream_iv_{int(strict)}"
         _run_to_memory(enriched2, name2, str(tmp_path))
@@ -445,9 +453,6 @@ def test_skinny_enrich_stream_matches_batch(spark, stream_input, tmp_path, stric
         pd.testing.assert_frame_equal(got2, batch, check_dtype=False)
     finally:
         iv.unpersist()
-    # neither mode without intervals nor without log+sources is valid
-    with pytest.raises(ValueError):
-        sp.asof_enrich_stream_skinny(stream.select(*probe_cols))
 
 
 def test_incremental_dedup_job_stream_and_replay(spark, tmp_path):
